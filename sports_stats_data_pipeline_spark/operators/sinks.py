@@ -1,8 +1,9 @@
-"""Crash-safe replacement of a parquet sink directory.
+"""Crash-safe replacement of, and appends to, a parquet sink directory.
 
 Parquet has no transactional MERGE (that is Delta's job at production
 scale); this is the no-Delta stand-in shared by the batch scrape ingest
-(sources.scrape_pipeline) and the streaming upsert (streaming.pipeline):
+(sources.scrape_pipeline), the streaming upsert (streaming.pipeline) and
+the other staged writers. Replacing a sink:
 
     write ``<sink>.staging`` → rename live aside to ``<sink>.old`` →
     promote staging → drop ``.old``
@@ -14,6 +15,24 @@ but a crash at ANY point leaves a state from which :func:`recover_sink`
 restores a complete sink — previously merged rows are never lost. The
 old rmtree-then-rename approach had a window where a crash lost the
 entire sink and a replayed batch would rebuild from itself alone.
+
+Insert-only sinks (the scrape ingest after its first round, the
+streaming upsert and the near-dup store after their first batch) do not
+rewrite the live sink at all — a run costs O(Δ), not O(sink) — and use
+the append protocol of :func:`append_staging`:
+
+    write only the new rows to ``<sink>.staging`` → move its part files
+    into the live sink under a unique per-run prefix → drop staging
+
+Each move is one atomic rename, but the moves are not atomic as a
+group. Crash contract: a crash leaves the live sink holding every old
+row plus the new rows of the files already moved, each row whole;
+:func:`recover_sink` discards the leftover staging dir, and the next
+run re-derives the rows not yet moved, because their keys are still
+absent from the sink. This holds for any writer whose rows are
+independent per key and whose run anti-joins the sink's keys before
+writing — a partly visible run can then neither duplicate nor lose a
+key.
 """
 
 from __future__ import annotations
@@ -32,6 +51,26 @@ def promote_staging(sink_path: str) -> None:
     os.rename(sink_path + ".staging", sink_path)
     if os.path.exists(old):
         shutil.rmtree(old)
+
+
+def append_staging(sink_path: str, prefix: str) -> None:
+    """Append a fully-written ``<sink>.staging`` dir to the live sink:
+    move each of its non-empty parquet part files into the sink as
+    ``<prefix><name>``, then drop staging. ``prefix`` must be unique per
+    run (a part file name is only unique within one write).
+
+    A zero-row part file carries only the schema, which the live sink
+    already has, so it is not moved: a run that adds nothing leaves the
+    sink's file list unchanged. The crash contract is in the module
+    docstring."""
+    import pyarrow.parquet as pq
+
+    staging = sink_path + ".staging"
+    for f in sorted(os.listdir(staging)):
+        src = os.path.join(staging, f)
+        if f.endswith(".parquet") and pq.read_metadata(src).num_rows:
+            os.rename(src, os.path.join(sink_path, prefix + f))
+    shutil.rmtree(staging)
 
 
 def recover_sink(sink_path: str) -> None:

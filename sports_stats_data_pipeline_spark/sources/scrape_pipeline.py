@@ -5,31 +5,36 @@ Dataflow (mirrors fighters_scraper.py:159-211 / fights_scraper.py:217-267):
 
     discover keys -> anti-join sink (J1: skip processed) -> fetch
     (I1 retry + I2 rate limit, sources.fetch) -> parse (S4 UDF,
-    sources.html_source) -> insert-if-absent merge (A5/U1 first-wins,
-    operators.merge) -> overwrite parquet sink (S5, Parquet not CSV)
+    sources.html_source) -> append the parsed rows to the parquet sink
+    (S5, Parquet not CSV; A5/U1 first-wins by construction)
 
 Key upgrades over the reference, same semantics:
 - the sink is Parquet with an explicit schema (not inference-on-read CSV);
-- the merge is O(existing + Δ) once per run, not an O(total) CSV rewrite
-  every N rows — periodic checkpointing belongs to Structured Streaming
-  (streaming.pipeline.run_streaming_upsert) where the state store does it
-  transactionally;
+- a resumed run costs O(Δ), not the reference's O(total) CSV rewrite
+  every N rows: the URL list is deduplicated on the driver, the one
+  anti-join reads only the sink's key column, and only the Δ new rows
+  are written — the live sink is never rewritten
+  (operators.sinks.append_staging); periodic checkpointing belongs to
+  Structured Streaming (streaming.pipeline.run_streaming_upsert) where
+  the state store does it transactionally;
 - fetch parallelism is explicit (``concurrency`` partitions), the
   reference is single-threaded.
 
 Resume-safety invariant (tested in tests/test_ingest.py): running any
-prefix of the URL set, then the full set, produces byte-identical sink
-contents to one full run — the reference's core guarantee (R14-15).
+prefix of the URL set, then the full set, produces the same sink rows
+as one full run — the reference's core guarantee (R14-15) — and so does
+a run that crashed at any point and was re-run.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.merge import insert_if_absent
-from ..operators.sinks import promote_staging, recover_sink
+from ..operators.sinks import append_staging, promote_staging, recover_sink
 from ..schemas import (
     FIGHTERS_RAW,
     FIGHTS_RAW,
@@ -40,18 +45,18 @@ from .fetch import FetchConfig, Transport, fetch_urls
 from .html_source import parse_pages
 
 
-def _load_sink(spark: SparkSession, sink_path: str, ddl: str) -> DataFrame:
-    if os.path.exists(sink_path):
-        return spark.read.parquet(sink_path)
-    return spark.createDataFrame([], schema=ddl)
+def _url_relation(spark: SparkSession, urls: list[str]) -> DataFrame:
+    """The offered URLs as a one-column relation, first occurrence kept.
 
-
-def _replace_sink(df: DataFrame, sink_path: str) -> None:
-    # stage → rename-aside → promote (never rmtree the live sink before
-    # the promote): a crash at any point leaves a recoverable complete
-    # sink — operators.sinks documents the protocol.
-    df.write.mode("overwrite").parquet(sink_path + ".staging")
-    promote_staging(sink_path)
+    Deduplicated on the driver (``dict.fromkeys`` keeps order) and built
+    from a pandas frame, which goes through Arrow into a JVM-side
+    relation: no pickled Python-list RDD and no ``dropDuplicates``
+    shuffle. The key list is driver-sized by construction — the
+    discovery steps produce it there."""
+    unique = pd.Series(list(dict.fromkeys(urls)), dtype=object)
+    return spark.createDataFrame(
+        pd.DataFrame({"url": unique}), schema="url string"
+    )
 
 
 def ingest(
@@ -63,29 +68,40 @@ def ingest(
     cfg: FetchConfig | None = None,
     concurrency: int = 4,
 ) -> DataFrame:
-    """One incremental ingestion run; returns the merged sink DataFrame."""
+    """One incremental ingestion run; returns the sink DataFrame."""
     if kind == "fighter":
         ddl, struct, key = fighters_raw_ddl(), FIGHTERS_RAW, "URL"
     else:
         ddl, struct, key = fights_raw_ddl(), FIGHTS_RAW, "fight_url"
     field_names = [f.name for f in struct if f.name != key]
     recover_sink(sink_path)
-    existing = _load_sink(spark, sink_path, ddl)
+    resumed = os.path.exists(sink_path)
 
-    url_df = spark.createDataFrame(
-        [(u,) for u in urls], schema="url string"
-    ).dropDuplicates(["url"])
-    # J1: the incremental anti-join BEFORE the expensive fetch — predicate
-    # placement the optimizer cannot do through an opaque UDF, so the
-    # program orders it explicitly (SURVEY.md §4.1 UDF-barrier note).
-    todo = url_df.join(existing.select("url"), on="url", how="left_anti")
+    todo = _url_relation(spark, urls)
+    if resumed:
+        # J1: the incremental anti-join BEFORE the expensive fetch —
+        # predicate placement the optimizer cannot do through an opaque
+        # UDF, so the program orders it explicitly (SURVEY.md §4.1
+        # UDF-barrier note). The sink's schema is known, so its reads
+        # pass it and skip Spark's footer-inference job.
+        sunk = spark.read.schema("url string").parquet(sink_path)
+        todo = todo.join(sunk, on="url", how="left_anti")
 
     pages = fetch_urls(todo, transport, cfg, concurrency=concurrency)
     parsed = parse_pages(pages, kind=kind, schema=ddl, field_names=field_names)
 
-    merged = insert_if_absent(existing, parsed, keys=["url"])
-    _replace_sink(merged, sink_path)
-    return spark.read.parquet(sink_path)
+    # ``parsed`` is exactly the rows to insert, so no merge runs here:
+    # the URL list is duplicate-free, the anti-join above removed every
+    # key the sink holds, and fetch/parse emit at most one row per URL.
+    # First-wins (operators.merge.insert_if_absent's semantics) holds by
+    # construction — existing rows are never rewritten, and each new key
+    # arrives once.
+    parsed.write.mode("overwrite").parquet(sink_path + ".staging")
+    if resumed:
+        append_staging(sink_path, f"r{uuid.uuid4().hex[:12]}_")
+    else:
+        promote_staging(sink_path)
+    return spark.read.schema(ddl).parquet(sink_path)
 
 
 def discover_fighter_urls(
@@ -121,10 +137,9 @@ def discover_fight_urls(
     explode over the level-1 fetch results."""
     from pyspark.sql import functions as F
 
-    event_df = spark.createDataFrame(
-        [(u,) for u in event_urls], schema="url string"
-    ).dropDuplicates(["url"])
-    pages = fetch_urls(event_df, transport, cfg, concurrency=concurrency)
+    pages = fetch_urls(
+        _url_relation(spark, event_urls), transport, cfg, concurrency=concurrency
+    )
     from .html_source import _HREF_RE
 
     # pure-expression link extraction reusing the parser's href pattern

@@ -42,7 +42,7 @@ from ..functions.text import (
     shingle_hashes,
     shingles,
 )
-from ..operators.sinks import promote_staging, recover_sink
+from ..operators.sinks import append_staging, promote_staging, recover_sink
 
 #: bucket cap mirrored from the batch operator — a super-bucket in the
 #: index is skipped, not joined (bounded-recall contract, skew guard).
@@ -223,19 +223,24 @@ def run_streaming_neardup_dedup(
         recover_sink(store_path)
         holds: list[DataFrame] = []
         novel = dedup_batch_against_store(s, batch, store_path, holds=holds)
-        if os.path.exists(store_path):
-            existing = s.read.parquet(store_path)
+        resumed = os.path.exists(store_path)
+        if resumed:
             # replay guard: a re-delivered batch's survivors are already
             # in the store — anti-join by doc_id keeps the write
             # idempotent (cf. operators.merge.insert_if_absent).
             novel = novel.join(
-                existing.select("doc_id"), "doc_id", "left_anti"
+                s.read.parquet(store_path).select("doc_id"),
+                "doc_id",
+                "left_anti",
             )
-            # O(Δ) append (round 13, guide §1.2): write ONLY the novel
-            # rows and move their data files into the live store —
-            # the former existing∪novel full-store rewrite re-wrote
-            # every previously admitted (text, shingles, bands) row on
-            # EVERY batch, O(total) per batch, exactly the reference
+        novel.write.mode("overwrite").parquet(store_path + ".staging")
+        if resumed:
+            # O(Δ) append (round 13, guide §1.2): only the novel rows
+            # are written, and operators.sinks.append_staging moves
+            # their files into the live store — the former
+            # existing∪novel full-store rewrite re-wrote every
+            # previously admitted (text, shingles, bands) row on EVERY
+            # batch, O(total) per batch, exactly the reference
             # pathology this module's docstring criticizes. Crash
             # contract, batch >= 1: the per-file renames are not
             # atomic as a group, but a crash mid-move replays the
@@ -249,19 +254,8 @@ def run_streaming_neardup_dedup(
             # partial batch suffix finds no new match. Batch 0 keeps
             # the staged-replace promote (creates the store
             # atomically).
-            staging = store_path + ".staging"
-            novel.write.mode("overwrite").parquet(staging)
-            for f in os.listdir(staging):
-                if f.endswith(".parquet"):
-                    os.rename(
-                        os.path.join(staging, f),
-                        os.path.join(store_path, f"b{batch_id}_{f}"),
-                    )
-            import shutil
-
-            shutil.rmtree(staging)
+            append_staging(store_path, f"b{batch_id}_")
         else:
-            novel.write.mode("overwrite").parquet(store_path + ".staging")
             promote_staging(store_path)
         # release the batch's persisted signature relation — a long-
         # running stream must not accumulate one pinned relation per

@@ -28,8 +28,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.merge import insert_if_absent
-from ..operators.sinks import promote_staging, recover_sink
+from ..operators.sinks import append_staging, promote_staging, recover_sink
 from ..plans.relational import cents
 
 #: events schema for the file-stream source. Declaring ``ts timestamp``
@@ -276,10 +275,11 @@ def run_streaming_upsert(
     micro-batch is insert-if-absent'ed into a parquet sink via
     foreachBatch (SURVEY.md §2.10 row 3 / §7.2 step 6).
 
-    Idempotent under replay: re-delivered rows lose the anti-join, and
-    the stage→rename-aside→promote protocol (+ startup recovery) means a
-    crash at any point leaves a complete sink for the replayed batch to
-    merge against (operators.sinks documents the protocol and its
+    Idempotent under replay: re-delivered rows lose the anti-join.
+    Batch 0 creates the sink with the stage→rename-aside→promote
+    protocol, later batches append only their new rows; with startup
+    recovery, a crash at any point leaves a sink the replayed batch
+    completes (operators.sinks documents both protocols and their
     guarantees).
     """
     recover_sink(sink_path)
@@ -290,13 +290,21 @@ def run_streaming_upsert(
     def upsert(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
         recover_sink(sink_path)
-        if os.path.exists(sink_path):
-            existing = s.read.parquet(sink_path)
-            merged = insert_if_absent(existing, batch, keys=list(keys))
+        resumed = os.path.exists(sink_path)
+        # Δ = one batch row per key the sink lacks: insert-if-absent
+        # that reads only the sink's key column and writes only Δ.
+        delta = batch.dropDuplicates(list(keys))
+        if resumed:
+            sunk = s.read.parquet(sink_path).select(*keys)
+            delta = delta.join(sunk, on=list(keys), how="left_anti")
+        delta.write.mode("overwrite").parquet(sink_path + ".staging")
+        if resumed:
+            # crash mid-append: the replayed batch (foreachBatch is
+            # at-least-once) re-derives Δ against the partly appended
+            # sink — moved keys lose the anti-join, the rest land.
+            append_staging(sink_path, f"b{batch_id}_")
         else:
-            merged = batch.dropDuplicates(list(keys))
-        merged.write.mode("overwrite").parquet(sink_path + ".staging")
-        promote_staging(sink_path)
+            promote_staging(sink_path)
 
     q = (
         stream.writeStream.foreachBatch(upsert)

@@ -4,6 +4,7 @@ resume-safety property of the end-to-end pipeline (R14-15)."""
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
@@ -215,6 +216,103 @@ def test_ingest_end_to_end_and_resume_safety(spark, fleet_transport, tmp_path):
     # idempotence: re-running with nothing new changes nothing
     df4 = ingest(spark, urls[:6], transport, sink, cfg=_cfg(), concurrency=2)
     assert df4.count() == 11
+
+
+def _by_url(df) -> list:
+    return sorted(df.collect(), key=lambda r: r["url"])
+
+
+def _assert_clean(spark, sink: str) -> None:
+    urls = [r["url"] for r in spark.read.parquet(sink).select("url").collect()]
+    assert len(urls) == len(set(urls)), "duplicate url in the sink"
+    assert not os.path.exists(sink + ".staging")
+
+
+@pytest.mark.parametrize(
+    "moved", [0, 1], ids=["after_staging_write", "after_one_part_moved"]
+)
+def test_crashed_resume_round_reruns_to_uninterrupted_rows(
+    spark, fleet_transport, tmp_path, monkeypatch, moved
+):
+    """A resumed round that crashes while appending its part files —
+    before the first move, or after 1 of n — and is then recovered and
+    re-run gives the rows of an uninterrupted run."""
+    from sports_stats_data_pipeline_spark.operators.sinks import recover_sink
+
+    urls, transport = fleet_transport
+    ref = str(tmp_path / "ref")
+    ingest(spark, urls[:4], transport, ref, cfg=_cfg(), concurrency=2)
+    expected = _by_url(
+        ingest(spark, urls, transport, ref, cfg=_cfg(), concurrency=2)
+    )
+
+    sink = str(tmp_path / "sink")
+    ingest(spark, urls[:4], transport, sink, cfg=_cfg(), concurrency=2)
+    real_rename, done = os.rename, []
+
+    def crash_after(src, dst):
+        if len(done) == moved:
+            raise OSError("injected crash")
+        real_rename(src, dst)
+        done.append(dst)
+
+    monkeypatch.setattr(os, "rename", crash_after)
+    with pytest.raises(OSError, match="injected crash"):
+        ingest(spark, urls, transport, sink, cfg=_cfg(), concurrency=2)
+    monkeypatch.undo()
+    assert os.path.exists(sink + ".staging")
+    recover_sink(sink)
+    _assert_clean(spark, sink)
+    # the crash left the 4 first-round rows plus the moved file's rows
+    partial = spark.read.parquet(sink).count()
+    assert (partial > 4) == (moved > 0) and partial < len(expected)
+
+    got = ingest(spark, urls, transport, sink, cfg=_cfg(), concurrency=2)
+    assert _by_url(got) == expected
+    _assert_clean(spark, sink)
+
+
+def test_ingest_rows_equal_with_arrow_off(spark, fleet_transport, tmp_path):
+    """Session canary: the pandas-built URL relation takes the non-Arrow
+    conversion path when Arrow is off — same sink rows either way."""
+    urls, transport = fleet_transport
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+
+    def two_rounds(sink: str) -> list:
+        ingest(spark, urls[:6], transport, sink, cfg=_cfg(), concurrency=2)
+        return _by_url(
+            ingest(spark, urls, transport, sink, cfg=_cfg(), concurrency=2)
+        )
+
+    spark.conf.set(key, "false")
+    try:
+        off = two_rounds(str(tmp_path / "arrow_off"))
+    finally:
+        spark.conf.set(key, prev)
+    on = two_rounds(str(tmp_path / "arrow_on"))
+    assert off == on and len(on) == 11
+
+
+def test_ingest_empty_url_list(spark, fleet_transport, tmp_path):
+    """``urls=[]`` creates an empty sink with the full schema, and
+    leaves an existing sink's rows and files unchanged."""
+    urls, transport = fleet_transport
+    fresh = str(tmp_path / "fresh")
+    df = ingest(spark, [], transport, fresh, cfg=_cfg(), concurrency=2)
+    assert df.count() == 0
+    assert spark.read.parquet(fresh).columns == df.columns
+    assert "Record" in df.columns
+
+    sink = str(tmp_path / "sink")
+    before = _by_url(
+        ingest(spark, urls[:6], transport, sink, cfg=_cfg(), concurrency=2)
+    )
+    files = sorted(os.listdir(sink))
+    after = ingest(spark, [], transport, sink, cfg=_cfg(), concurrency=2)
+    assert _by_url(after) == before
+    assert sorted(os.listdir(sink)) == files
+    _assert_clean(spark, sink)
 
 
 def test_fight_links_udtf_lateral_join(spark):

@@ -82,3 +82,40 @@ def test_extended_slots_within_job_budgets(spark):
         if n > budget:
             over.append(f"{name}: {n} jobs > budget {budget}")
     assert not over, "; ".join(over)
+
+
+#: one resumed ``ingest()`` round — a sink exists, 12 URLs are offered,
+#: 6 of them new — as (measured, budget), same ledger rule as above.
+#: The former merge-and-rewrite round ran 7 jobs on the same input;
+#: the append-only round runs the staging write's stages only.
+INGEST_RESUME_JOBS = (3, 5)
+
+
+def test_resumed_ingest_round_within_job_budget(spark, tmp_path):
+    from sports_stats_data_pipeline_spark.sources.fetch import FetchConfig
+    from sports_stats_data_pipeline_spark.sources.scrape_pipeline import (
+        ingest,
+    )
+
+    from . import fixtures_html as fx
+
+    urls = [f"http://example.com/fighter-details/f{i}" for i in range(12)]
+    pages = {u: fx.fighter_page(f"Fighter {i}") for i, u in enumerate(urls)}
+    cfg = FetchConfig(sleep=lambda s: None)
+    sink = str(tmp_path / "fighters")
+
+    def transport(url):
+        return 200, pages[url]
+
+    ingest(spark, urls[:6], transport, sink, cfg=cfg, concurrency=2)
+
+    grp = "job_budget_ingest_resume"
+    spark.sparkContext.setJobGroup(grp, "resumed ingest round")
+    try:
+        ingest(spark, urls, transport, sink, cfg=cfg, concurrency=2)
+    finally:
+        spark.sparkContext.setJobGroup("job_budget_idle", "idle")
+    n = len(spark.sparkContext.statusTracker().getJobIdsForGroup(grp))
+    assert n <= INGEST_RESUME_JOBS[1], (
+        f"resumed ingest round: {n} jobs > budget {INGEST_RESUME_JOBS[1]}"
+    )
