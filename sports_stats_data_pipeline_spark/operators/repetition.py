@@ -61,7 +61,7 @@ def top_ngram_stats(
     # doc length joins back AFTER the aggregates (doc-count-sized join):
     # as a projection sibling of the explode it would be re-evaluated
     # per gram row — O(n_chars · n_grams) per document (the Generate-
-    # sibling trap documented in operators/decontam.py).
+    # sibling trap documented in operators/search.py).
     exploded = docs.select(F.col(id_col), F.explode(grams).alias("gram"))
     counts = exploded.groupBy(id_col, "gram").agg(
         F.count("*").alias("__cnt")

@@ -3,12 +3,15 @@ steps downstream of dedup: quality filtering (perplexity + repetition +
 benchmark decontamination) and dataset layout (splits + source mixing +
 token-budget shard packing).
 
-These drive the operators from ``operators.lm``, ``operators.repetition``,
-``operators.decontam``, ``operators.sampling`` and ``operators.sharding``
-end-to-end over the ``documents`` table with full DuckDB oracles (each
-operator's twin is additionally pinned in its own pytest module:
-tests/test_lm.py, test_repetition.py, test_decontam.py, test_sampling.py,
-test_sharding.py).
+The two curation slots run end-to-end over the ``documents`` table
+with full DuckDB oracles. ``corpus_mix_split_shards`` drives
+``operators.sampling`` and ``operators.sharding``;
+``corpus_quality_filter`` fuses the char-LM scoring of
+``operators.lm``, the top-bigram statistic of ``operators.repetition``
+and a benchmark-shingle decontamination into one two-pass body (its
+docstring). The operators' twins are pinned in tests/test_lm.py,
+test_repetition.py, test_sampling.py and test_sharding.py; the fused
+decontamination is pinned by the slot's oracle.
 
 Determinism: every filter decision is integer arithmetic; the only
 floating output is the LM negative log-likelihood, emitted rounded to 3
@@ -23,8 +26,7 @@ Scale notes:
 - Repetition stats are two map-side-combinable aggregates bounded by
   distinct (doc, gram) pairs (operators/repetition.py).
 - Decontamination broadcasts the (small) benchmark shingle index — the
-  corpus is scanned once and never shuffled except the per-doc aggregate
-  (operators/decontam.py).
+  corpus is scanned once and never shuffled except the per-doc aggregate.
 - Split/mix are pure per-row hash projections (no shuffle, no rand());
   shard packing is the two-level distributed prefix sum — no global
   ordered window (operators/sampling.py, operators/sharding.py).
@@ -292,7 +294,7 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     - The per-doc char length + top-bigram ride the explode as ONE
       synthetic ``fam='len'`` row ('\\n'-delimited, see below) instead
       of projection siblings of the Generate (the O(len·grams) sibling
-      trap documented in operators/decontam.py) and instead of a
+      trap documented in operators/search.py) and instead of a
       join-back.
     - Model + index come back in ONE driver-bounded collect (model:
       n-gram vocabulary ≤ |alphabet|³, same argument as
@@ -305,9 +307,10 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
       measured equal-or-cache-slower at bench scale too (the cache
       write+read round-trip cancels the explode it saves).
 
-    The standalone operators (operators/lm.py, repetition.py,
-    decontam.py) remain the composable forms; this body is their
-    fusion for the one slot that wants all three signals.
+    The standalone operators (operators/lm.py, repetition.py) remain
+    the composable forms of two of the signals; this body fuses them
+    with the decontamination join for the one slot that wants all
+    three.
     """
     # fan_out: the scans fan out into expression-dense explodes and
     # nothing downstream repartitions on its own (round-10 A/B: -9% at
@@ -519,9 +522,13 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).merge(
         idx_pdf.rename(columns={"gram": "__mg"}), on="__mg", how="outer"
     )
-    # nullable integer dtypes: the outer merge introduces NaNs, and
-    # Arrow refuses float-NaN -> integer casts
+    # the outer merge introduces NaNs, and neither path accepts them in
+    # an integer column: Arrow refuses float-NaN -> integer casts, and
+    # the non-Arrow path's verifier refuses floats and pd.NA for
+    # LongType/IntegerType. Cast through nullable integers, then hand
+    # over plain Python ints and None, which both paths take.
     mi_pdf = mi_pdf.astype({"__mcnt": "Int64", "__hit": "Int32"})
+    mi_pdf = mi_pdf.astype(object).where(mi_pdf.notna(), None)
     mi_df = spark.createDataFrame(
         mi_pdf, "__mg string, __mcnt long, __hit int"
     )

@@ -131,3 +131,39 @@ def test_top_bigram_run_scan_matches_two_level_aggregate(spark):
     )
     diff = expr.exceptAll(ref).unionByName(ref.exceptAll(expr))
     assert diff.count() == 0, diff.limit(10).collect()
+
+
+def test_quality_filter_builds_and_matches_oracle_with_arrow_off(spark):
+    """Session canary: the merged model/index relation is built on the
+    driver from a pandas frame, so it takes the non-Arrow conversion
+    path when Arrow is off. Both paths must build the slot and give the
+    oracle's rows."""
+    import duckdb
+
+    from sports_stats_data_pipeline_spark.plans import all_registries
+    from sports_stats_data_pipeline_spark.sources.tables import TABLE_NAMES
+
+    from ._compare import assert_frames_match
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        off = corpus_quality_filter(spark, SF).toPandas()
+    finally:
+        spark.conf.set(key, prev)
+    on = corpus_quality_filter(spark, SF).toPandas()
+    assert_frames_match(off, on, "corpus_quality_filter arrow off vs on")
+
+    con = duckdb.connect()
+    try:
+        for t in TABLE_NAMES:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
+            )
+        oracle_pdf = con.execute(
+            all_registries().oracles["corpus_quality_filter"]
+        ).df()
+    finally:
+        con.close()
+    assert_frames_match(on, oracle_pdf, "corpus_quality_filter")
