@@ -228,10 +228,6 @@ def minhash(shingle_col: Column, j: int) -> Column:
     return minhash_from_hashes(shingle_hashes(shingle_col), j)
 
 
-def minhash_signature(shingle_col: Column, n_hashes: int = 8) -> list[Column]:
-    return [minhash(shingle_col, j).alias(f"mh_{j}") for j in range(n_hashes)]
-
-
 def minhash_signature_from_hashes(
     hash_col: Column, n_hashes: int = 8
 ) -> list[Column]:
@@ -246,79 +242,22 @@ def minhash_signature_from_hashes(
 def token_hashes(text: str | Column = "text") -> Column:
     """md5 per token — the shared input of the SimHash bit votes.
 
-    Materialize this column (persist / write) before fanning out into
-    :func:`simhash_from_hashes`: each of the n_bits aggregates references
-    it, and without a boundary Catalyst inlines the md5 transform into
-    every one of them (n_bits× the hashing cost).
+    Materialize this column (persist / write) before
+    :func:`simhash64_from_hashes` reads it: without a boundary Catalyst
+    inlines the md5 transform into the vote expressions that reference
+    it.
     """
     return F.transform(tokens(text), lambda t: F.md5(t))
-
-
-def simhash_from_hashes(hashes: Column, n_bits: int = 32) -> Column:
-    """SimHash bitstring from a precomputed md5-per-token array.
-
-    Bit ``i`` is the majority vote over tokens of bit ``i`` of md5(token),
-    where "bit i" is the high bit of hex nibble ``i`` (digit >= '8') —
-    exactly reproducible in SQL (``substr(md5(t), i+1, 1) >= '8'``).
-    """
-
-    # closure factory, not a default-arg capture: pyspark derives the HOF
-    # lambda arity from the Python signature, so `lambda acc, h, i=i` would
-    # be (wrongly) bound as a 3-argument merge function.
-    def vote(i: int) -> Column:
-        return F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.substring(h, i + 1, 1) >= "8", 1).otherwise(-1),
-        )
-
-    bits = [
-        F.when(vote(i) > 0, F.lit("1")).otherwise(F.lit("0"))
-        for i in range(n_bits)
-    ]
-    return F.concat(*bits)
-
-
-def simhash_bits(text: str | Column = "text", n_bits: int = 32) -> Column:
-    """SimHash straight from text — fine for one-shot use; for fan-out
-    pipelines compute :func:`token_hashes` once behind a persist boundary
-    and use :func:`simhash_from_hashes`."""
-    return simhash_from_hashes(token_hashes(text), n_bits)
-
-
-def simhash_int_from_hashes(hashes: Column, n_bits: int = 32) -> Column:
-    """SimHash packed into a BIGINT (bit i of md5 = high bit of hex
-    nibble i; majority vote sets bit ``n_bits-1-i``). Integer form makes
-    pair verification a single ``bit_count(xor())`` instead of n_bits
-    string comparisons — the difference between 13s and ~0 on millions
-    of candidate pairs.
-    """
-
-    def vote(i: int) -> Column:
-        return F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.substring(h, i + 1, 1) >= "8", 1).otherwise(-1),
-        )
-
-    out = F.lit(0).cast("long")
-    for i in range(n_bits):
-        out = out + F.when(
-            vote(i) > 0, F.lit(1 << (n_bits - 1 - i)).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return out
 
 
 def simhash64_from_hashes(hashes: Column) -> Column:
     """64-bit SimHash packed into a signed BIGINT from a precomputed
     md5-per-token array.
 
-    Uses all 4 bits of each of the first 16 hex nibbles (the 32-bit form
-    above uses only the high bit of 32 nibbles, capping it at 32 bits —
-    too narrow for banding at scale: 8-bit bands give 256 buckets/band and
-    saturate immediately). Bit ``i`` (i=0 is the MSB, bit 63) is the
+    Uses all 4 bits of each of the first 16 hex nibbles (a form voting on
+    only the high bit of 32 nibbles caps out at 32 bits — too narrow for
+    banding at scale: 8-bit bands give 256 buckets/band and saturate
+    immediately). Bit ``i`` (i=0 is the MSB, bit 63) is the
     majority vote over tokens of bit ``3 - i%4`` of nibble ``i//4``.
     Bit 63 is applied as ``-(2**63)`` so the sum never overflows the
     signed 64-bit range; Hamming stays a single ``bit_count(xor())`` on
@@ -394,43 +333,6 @@ def sql_simhash64_int(text_expr: str = "text") -> str:
             f"ELSE CAST(0 AS BIGINT) END"
         )
     return "(" + " + ".join(parts) + ")"
-
-
-def sql_simhash_int(n_bits: int = 32, text_expr: str = "text") -> str:
-    """DuckDB twin of :func:`simhash_int_from_hashes` (from text)."""
-    toks = f"string_split_regex({text_expr}, '\\s+')"
-    parts = []
-    for i in range(n_bits):
-        vote = (
-            f"list_sum(list_transform({toks}, t -> CASE WHEN "
-            f"substr(md5(t), {i + 1}, 1) >= '8' THEN 1 ELSE -1 END))"
-        )
-        parts.append(
-            f"CASE WHEN {vote} > 0 THEN CAST({1 << (n_bits - 1 - i)} AS BIGINT)"
-            f" ELSE 0 END"
-        )
-    return "(" + " + ".join(parts) + ")"
-
-
-def sql_simhash_bits(n_bits: int = 32, text_expr: str = "text") -> str:
-    """DuckDB twin of :func:`simhash_bits` (for oracle strings)."""
-    toks = f"string_split_regex({text_expr}, '\\s+')"
-    parts = []
-    for i in range(n_bits):
-        vote = (
-            f"list_sum(list_transform({toks}, t -> CASE WHEN "
-            f"substr(md5(t), {i + 1}, 1) >= '8' THEN 1 ELSE -1 END))"
-        )
-        parts.append(f"CASE WHEN {vote} > 0 THEN '1' ELSE '0' END")
-    return " || ".join(parts)
-
-
-def hamming_expr(col_a: str, col_b: str, n_bits: int = 32) -> Column:
-    """Hamming distance between two equal-length bitstring columns."""
-    return F.expr(
-        f"size(filter(transform(sequence(1, {n_bits}), "
-        f"i -> substr({col_a}, i, 1) <> substr({col_b}, i, 1)), x -> x))"
-    )
 
 
 def band_keys(n_hashes: int = 8, rows_per_band: int = 2) -> list[Column]:

@@ -20,9 +20,8 @@ most members link directly to the canonical copy), so the fixpoint
 arrives in 2-4 rounds in practice; for adversarial long-chain graphs the
 alternating small-star/large-star formulation (Kiveris et al., "Connected
 Components in MapReduce and Beyond", SOCC'14) brings worst-case rounds to
-O(log² n) — implemented below as :func:`connected_components_star`, same
-join+agg primitives. The convergence probe per round is a LIMIT 1
-existence check on changed labels, not a full count.
+O(log² n) with the same join+agg primitives. The convergence probe per
+round is a LIMIT 1 existence check on changed labels, not a full count.
 
 Determinism: min() is order-insensitive and the iteration runs to an
 exact fixpoint, so the output is independent of partitioning, scheduling
@@ -114,8 +113,9 @@ def connected_components(
 
     Returns ``(id_col, cluster_id)``, one row per node. Raises if the
     fixpoint is not reached within ``max_rounds`` — a diameter that deep
-    means the input is not a dedup-cluster graph and the small-star/
-    large-star variant (module docstring) should be used instead.
+    means the input is not a dedup-cluster graph (such graphs need the
+    small-star/large-star formulation the module docstring cites, which
+    this module does not implement).
 
     Graphs with at most :data:`SMALL_GRAPH_EDGES` edges (known exactly
     from the materialized edge checkpoint) resolve driver-side via
@@ -235,114 +235,7 @@ def connected_components(
             free_labels()
             raise RuntimeError(
                 f"connected_components: no fixpoint within {max_rounds} "
-                "rounds (component diameter too deep — use small-star/"
-                "large-star)"
+                "rounds (component diameter too deep for hash-min)"
             )
     finally:
         free_sym()
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 50,
-) -> DataFrame:
-    """Star-contraction connected components (alternating large-star /
-    small-star, Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SOCC'14) — the deep-graph path promised by
-    :func:`connected_components`.
-
-    Hash-min needs one round per unit of component *diameter*; star
-    contraction halves stars into each other and converges in
-    O(log² n) rounds worst-case regardless of diameter — the right
-    algorithm when the near-dup graph degenerates into long chains
-    (template pages each overlapping only the next revision).
-
-    Per round, both phases are the same primitives as hash-min (one
-    shuffle join + one hash aggregate each) over the CONTRACTED edge
-    set, which shrinks geometrically — later rounds are nearly free.
-    Output is identical to hash-min (min-id per component) and equally
-    deterministic: the stable state is the unique min-rooted star
-    forest, independent of partitioning and round count.
-
-    - large-star(u): for m = min(Γ(u) ∪ {u}), connect every strictly
-      larger neighbor v to m;
-    - small-star(u) on downward-oriented edges: connect u and its
-      smaller neighbors to their minimum.
-    """
-    E = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-    )
-    from .iterutil import eager_checkpoint, no_aqe
-
-    E, free_e = eager_checkpoint(E)
-    # AQE OFF for the contraction rounds (iterutil.no_aqe — same
-    # rationale and bit-identical-output argument as the hash-min loop)
-    with no_aqe(nodes.sparkSession):
-        for _ in range(max_rounds):
-            # ---- large-star: emit (v, m(u)) for every v ∈ Γ(u), v > u
-            sym = E.unionByName(
-                E.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            m = sym.groupBy("u").agg(
-                F.min(F.least(F.col("v"), F.col("u"))).alias("m")
-            )
-            large = (
-                sym.filter(F.col("v") > F.col("u"))
-                .join(m, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            )
-            # ---- small-star on downward-oriented edges: (u and every
-            # smaller neighbor) all point at the group minimum
-            down = (
-                large.filter(F.col("u") != F.col("v"))
-                .select(
-                    F.greatest("u", "v").alias("u"),
-                    F.least("u", "v").alias("v"),
-                )
-                .distinct()
-            )
-            m2 = down.groupBy("u").agg(F.min("v").alias("m"))
-            new_e, free_new = eager_checkpoint(
-                down.join(m2, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .unionByName(m2.select("u", F.col("m").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            # fixpoint = edge set unchanged (both canonical downward
-            # sets; two existence probes, LIMIT 1 each, not full counts)
-            stable = (
-                new_e.join(E, ["u", "v"], "left_anti").limit(1).count() == 0
-                and E.join(new_e, ["u", "v"], "left_anti").limit(1).count() == 0
-            )
-            # new_e is materialized — safe to drop the previous round's
-            # blocks (explicit handle; DataFrame.unpersist would silently
-            # no-op on checkpoint state). The FINAL E must stay cached: the
-            # returned DataFrame reads its checkpointed blocks.
-            free_e()
-            E = new_e
-            free_e = free_new
-            if stable:
-                roots = E.groupBy("u").agg(F.min("v").alias("cluster_id"))
-                return (
-                    nodes.select(F.col(id_col).alias("id"))
-                    .join(roots.withColumnRenamed("u", "id"), "id", "left")
-                    .select(
-                        F.col("id").alias(id_col),
-                        F.coalesce("cluster_id", F.col("id")).alias(
-                            "cluster_id"
-                        ),
-                    )
-                )
-    free_e()
-    raise RuntimeError(
-        f"connected_components_star: no fixpoint within {max_rounds} "
-        "rounds (should be ~log² n — check for pathological input)"
-    )

@@ -183,140 +183,3 @@ def heavy_hitters(
             F.expr(f"(10000 * n) div {total}").alias("freq_bp"),
         )
     )
-
-
-def grouped_partition_summaries(
-    df: DataFrame, group_col: str, col: str, capacity: int
-) -> DataFrame:
-    """Per-(partition, group) Misra-Gries summaries:
-    DataFrame[group, value, weight] with <= ``capacity`` + 1 rows per
-    group per input partition. The superset guarantee holds per group
-    by the same averaging argument applied to the group's rows alone.
-    As in :func:`partition_summaries`, each (partition, group) emits a
-    ``value IS NULL`` marker row carrying the group's partition-local
-    row count, so group totals need no separate counting scan."""
-    src = df.select(
-        F.col(group_col).cast("string").alias("group"),
-        F.col(col).cast("string").alias("value"),
-    ).filter(F.col("value").isNotNull() & F.col("group").isNotNull())
-
-    def summarize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        groups: dict[str, dict[str, int]] = {}
-        group_rows: dict[str, int] = {}
-        for pdf in it:
-            vc = pdf.groupby(["group", "value"], sort=False).size()
-            for (g, v), c in vc.items():
-                counters = groups.setdefault(g, {})
-                group_rows[g] = group_rows.get(g, 0) + int(c)
-                _mg_update(
-                    counters,
-                    np.array([v]),
-                    np.array([c]),
-                    capacity,
-                )
-        rows = [
-            (g, v, c)
-            for g, counters in groups.items()
-            for v, c in counters.items()
-        ] + [(g, None, n) for g, n in group_rows.items()]
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=["group", "value", "weight"]
-            ).astype({"weight": "int64"})
-        else:
-            yield pd.DataFrame(
-                {
-                    "group": pd.Series([], dtype="object"),
-                    "value": pd.Series([], dtype="object"),
-                    "weight": pd.Series([], dtype="int64"),
-                }
-            )
-
-    return src.mapInPandas(
-        summarize, "group string, value string, weight long"
-    )
-
-
-def heavy_hitters_grouped(
-    df: DataFrame,
-    group_col: str,
-    col: str,
-    threshold_denom: int,
-    capacity: int | None = None,
-) -> DataFrame:
-    """Per-group exact heavy hitters: for each group, every value of
-    ``col`` occurring strictly more than ``1/threshold_denom`` of the
-    group's non-null rows. DataFrame[group, value, n, total, freq_bp]
-    with ``total`` the GROUP's row count.
-
-    Executor memory per task is ``capacity × groups-per-partition``
-    summary entries; when the group universe is itself huge,
-    pre-repartition by ``group_col`` so each task sees few groups (the
-    summary then degenerates gracefully toward a plain per-group
-    count, which is the right tool at that cardinality anyway).
-    """
-    if threshold_denom < 2:
-        raise ValueError(
-            f"threshold_denom must be >= 2, got {threshold_denom}"
-        )
-    cap = 2 * threshold_denom if capacity is None else capacity
-    if cap < threshold_denom:
-        raise ValueError(
-            f"capacity {cap} < threshold_denom {threshold_denom} "
-            "breaks the superset guarantee"
-        )
-    src = df.select(
-        F.col(group_col).cast("string").alias("group"),
-        F.col(col).cast("string").alias("value"),
-    ).filter(F.col("value").isNotNull() & F.col("group").isNotNull())
-    # the summary feeds candidates AND group totals (NULL marker rows)
-    # — two scans of the input, not three; collected eagerly like
-    # heavy_hitters (tiny, broadcast-bound, no orphaned cache entry)
-    spark = df.sparkSession
-    summ = grouped_partition_summaries(df, group_col, col, cap).collect()
-    totals_map: dict[str, int] = {}
-    cands: set[tuple[str, str]] = set()
-    for r in summ:
-        if r["value"] is None:
-            totals_map[r["group"]] = (
-                totals_map.get(r["group"], 0) + r["weight"]
-            )
-        else:
-            cands.add((r["group"], r["value"]))
-    if not cands or not totals_map:
-        return spark.createDataFrame(
-            [],
-            "group string, value string, n long, total long, "
-            "freq_bp long",
-        )
-    # pandas-backed (Arrow) relations — same rationale as heavy_hitters
-    cand_df = spark.createDataFrame(
-        pd.DataFrame(sorted(cands), columns=["group", "value"]),
-        "group string, value string",
-    )
-    totals = spark.createDataFrame(
-        pd.DataFrame(
-            sorted(totals_map.items()), columns=["group", "total"]
-        ),
-        "group string, total long",
-    )
-    exact = (
-        src.join(F.broadcast(cand_df), ["group", "value"], "left_semi")
-        .groupBy("group", "value")
-        .agg(F.count("*").alias("n"))
-    )
-    return (
-        exact.join(F.broadcast(totals), "group")
-        .filter(F.col("n") * threshold_denom > F.col("total"))
-        .select(
-            "group",
-            "value",
-            "n",
-            "total",
-            # integer floor division end-to-end: the double path
-            # (floor(10000*n / total)) can round across an integer
-            # boundary once 10000*n exceeds 2^53 and flip vs the
-            # oracle's `10000 * n // total`
-            F.expr("(10000 * n) div total").alias("freq_bp"),
-        )
-    )

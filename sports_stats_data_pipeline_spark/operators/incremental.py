@@ -11,7 +11,7 @@ from them like avg = sum/count). Distinct counts are non-decomposable
 EXACTLY but decomposable approximately: the ``approx_distinct`` kind
 keeps a Datasketches HLL sketch per key (binary state column, delta =
 ``hll_sketch_agg``, combine = ``hll_union_agg``) and serves the count
-via :func:`estimate_sketches` — union of sketches IS the sketch of the
+via ``hll_sketch_estimate`` — union of sketches IS the sketch of the
 union, so maintenance stays O(Δ) with ~±2% error at high cardinality.
 Other non-decomposable measures (exact median, exact distinct) still
 need a rescan, and this module refuses rather than approximates
@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "aggregate_delta",
     "merge_aggregate_state",
-    "estimate_sketches",
     "AGG_COMBINERS",
 ]
 
@@ -103,20 +102,3 @@ def merge_aggregate_state(
         for out, (kind, _) in measures.items()
     ]
     return combined.groupBy(*keys).agg(*aggs)
-
-
-def estimate_sketches(
-    state: DataFrame, measures: dict[str, tuple[str, str]]
-) -> DataFrame:
-    """Serving view of a sketch-carrying state: replace each
-    ``approx_distinct`` sketch column with its BIGINT estimate (other
-    columns pass through unchanged). The state itself keeps the binary
-    sketches — estimating is lossy, so it happens at READ time only."""
-    cols = []
-    for c in state.columns:
-        kind = measures.get(c, (None, None))[0]
-        if kind == "approx_distinct":
-            cols.append(F.hll_sketch_estimate(F.col(c)).alias(c))
-        else:
-            cols.append(F.col(c))
-    return state.select(*cols)

@@ -1,8 +1,8 @@
 """Deterministic mini-batch-free Lloyd k-means over an embedding column,
-entirely in DataFrame expressions — the real coarse quantizer behind the
-IVF ANN family (plans.documents.ann_ivf_label_topk uses the corpus
-``label`` as a stand-in cell; at ingest time this operator produces the
-cell assignment instead).
+entirely in DataFrame expressions — the coarse quantizer behind
+operators.quantize.quantized_ivf_topk and operators.mining
+(plans.documents.ann_ivf_label_topk uses the corpus ``label`` as a
+stand-in cell instead).
 
 Scale shape per iteration (N vectors × dim, k centroids):
 - assignment: broadcast the k×dim centroid table (tiny) over one corpus

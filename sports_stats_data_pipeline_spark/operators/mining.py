@@ -5,8 +5,8 @@ models with triplet / InfoNCE losses, where random negatives are too
 easy to carry gradient and the HARD ones (high-cosine, wrong label) do
 the work (Schroff et al., FaceNet, 2015).
 
-Built on the same scale shape as operators.similarity.ivf_topk: a
-k-means coarse quantizer bounds the candidate set to the anchor's
+Built on the same scale shape as operators.quantize.quantized_ivf_topk:
+a k-means coarse quantizer bounds the candidate set to the anchor's
 ``n_probe`` nearest cells, so mining cost is ~|anchors| × (corpus /
 n_cells × n_probe) instead of |anchors| × corpus. ``n_probe >= n_cells``
 degenerates to exact brute force (the equality the tests pin).
@@ -58,8 +58,7 @@ def mine_contrastive_pairs(
     lifetime — it feeds the result lazily, so this function cannot
     unpersist it (the quantize.py convention: the caller owns cleanup).
     Long-lived sessions mining many times should
-    ``spark.catalog.clearCache()`` between rounds, or persist the cell
-    assignment at ingest (similarity.build_ivf_index) and mine that.
+    ``spark.catalog.clearCache()`` between rounds.
     """
     assigned, centroids = kmeans_fit_assign(
         embeddings,
@@ -122,9 +121,10 @@ def mine_contrastive_pairs(
 
     if semi_hard:
         # the anchor's best-positive score; persist — it feeds a join
-        # against the same scored relation (cf. similarity.py persist
-        # note). Anchors absent here (no positive candidate) keep all
-        # negatives via the left join + coalesce(+inf sentinel).
+        # against the same scored relation, which would otherwise be
+        # recomputed from its full lineage. Anchors absent here (no
+        # positive candidate) keep all negatives via the left join +
+        # coalesce(+inf sentinel).
         scored = scored.persist()
         best_pos = (
             scored.filter(F.col("is_positive") == 1)

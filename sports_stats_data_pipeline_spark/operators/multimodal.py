@@ -82,76 +82,6 @@ def fake_decode_features(docs_with_payload: DataFrame) -> DataFrame:
 PIXELS_SCHEMA = "doc_id long, width int, height int, pixels array<int>"
 
 
-def fake_decode_pixels(
-    docs_with_payload: DataFrame, max_side: int = 16
-) -> DataFrame:
-    """Deterministic fake pixel decoder: derives a small grayscale grid
-    from the real payload bytes (dimensions from the first two bytes,
-    pixel values = payload tiled to width*height). Same contract a real
-    image decode has — binary in, (dims, pixel array) out — so the
-    resize/feature stages downstream exercise the true Arrow batch
-    shapes for array columns."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                w = 2 + b[0] % (max_side - 1)
-                h = 2 + b[1] % (max_side - 1)
-                buf = np.frombuffer(b, dtype=np.uint8)
-                reps = -(-(w * h) // max(1, len(buf)))  # ceil
-                px = np.tile(buf, reps)[: w * h].astype("int32")
-                rows.append((doc_id, w, h, px.tolist()))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "pixels"]
-            )
-
-    return docs_with_payload.select("doc_id", "payload").mapInPandas(
-        decode, schema=PIXELS_SCHEMA
-    )
-
-
-def resize_nearest(
-    pixels_df: DataFrame, out_w: int, out_h: int
-) -> DataFrame:
-    """Nearest-neighbor resize of row-major pixel grids to
-    ``out_w`` x ``out_h`` — the standard preprocessing step before
-    feature extraction / embedding of image columns.
-
-    Vectorized numpy per Arrow batch (one gather per image via a
-    precomputable index map ``src = floor(i * src_dim / dst_dim)``);
-    deterministic, partition-invariant, no interpolation float math.
-    At 100 TB this is exactly the shape of a real resize: the pixel
-    array column streams through mapInPandas in bounded Arrow batches,
-    and the index-map gather is the only per-pixel work.
-    """
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"bad output dims {out_w}x{out_h}")
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id, w, h, px in zip(
-                pdf["doc_id"], pdf["width"], pdf["height"], pdf["pixels"]
-            ):
-                grid = np.asarray(px, dtype=np.int32).reshape(h, w)
-                ys = (np.arange(out_h) * h) // out_h
-                xs = (np.arange(out_w) * w) // out_w
-                resized = grid[np.ix_(ys, xs)]
-                out.append((doc_id, out_w, out_h, resized.ravel().tolist()))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "pixels"]
-            )
-
-    return pixels_df.select(
-        "doc_id", "width", "height", "pixels"
-    ).mapInPandas(resize, schema=PIXELS_SCHEMA)
-
-
 def pil_available() -> bool:
     """True when pillow is importable (optional dependency)."""
     try:
@@ -168,10 +98,10 @@ def real_decode_pixels(
     backend: str = "auto",
 ) -> DataFrame:
     """Real-codec image decode: payload bytes → grayscale pixel grid in
-    :data:`PIXELS_SCHEMA` (same contract as :func:`fake_decode_pixels`,
-    so downstream resize/feature stages are codec-agnostic). Images
-    larger than ``max_side`` are thumbnailed (aspect-preserving) before
-    pixel export so one oversized asset can't blow an Arrow batch.
+    :data:`PIXELS_SCHEMA`, so downstream feature stages are
+    codec-agnostic. Images larger than ``max_side`` are thumbnailed
+    (aspect-preserving) before pixel export so one oversized asset
+    can't blow an Arrow batch.
     Undecodable payloads are dropped — the malformed-row filter (P6)
     semantics, matching the reference's skip-on-parse-failure rows.
 
@@ -234,7 +164,7 @@ def real_decode_pixels(
                 grid = np.asarray(px, dtype=np.int32).reshape(h, w)
                 if max(w, h) > max_side:
                     # aspect-preserving nearest-neighbor thumbnail via
-                    # the resize_nearest index-map gather
+                    # an index-map gather
                     ow = max(1, (w * max_side) // max(w, h))
                     oh = max(1, (h * max_side) // max(w, h))
                     ys = (np.arange(oh) * h) // oh

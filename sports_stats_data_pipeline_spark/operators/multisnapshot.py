@@ -25,9 +25,9 @@ the manifest IS the transaction log entry).
 Contracts: readers open manifest file lists (no directory LISTs —
 object-store-safe), paths are stored relative to the root,
 single-writer (concurrent committers race the version and the loser
-raises), vacuum removes unreferenced data dirs including orphans from
-pre-publish crashes. ``mode='append'`` appends per table — a table
-absent from the batch carries forward unchanged, so an O(Δ)
+raises), and a pre-publish crash leaves only data dirs no manifest
+lists, which no reader opens. ``mode='append'`` appends per table — a
+table absent from the batch carries forward unchanged, so an O(Δ)
 incremental publish touches only the tables that changed.
 """
 
@@ -44,7 +44,6 @@ __all__ = [
     "write_group_snapshot",
     "read_group_table",
     "list_group_snapshots",
-    "vacuum_group_snapshots",
 ]
 
 _MANIFEST_DIR = "_snapshots"
@@ -139,7 +138,7 @@ def write_group_snapshot(
     """Commit ``tables`` as ONE new version of the group; returns the
     version number. All tables' data is fully written BEFORE the single
     manifest rename makes any of it visible — a crash mid-write leaves
-    only invisible garbage (vacuum's job).
+    only invisible garbage.
 
     A table value may be a DataFrame (materialized by a Spark write) or
     a PATH STRING to an existing parquet directory, which is ADOPTED:
@@ -176,7 +175,7 @@ def write_group_snapshot(
 
     # every data dir THIS commit successfully wrote — removed together
     # on ANY failure (a mid-commit error on table 3 must not leave
-    # tables 1-2's v<k> dirs as orphans-until-vacuum). Appended only
+    # tables 1-2's v<k> dirs as orphans). Appended only
     # AFTER the errorifexists write succeeds, so a dir that already
     # existed (a racing writer's data) is never in the list and never
     # deleted here.
@@ -254,8 +253,8 @@ def write_group_snapshot(
             _no_link = {errno.EPERM, errno.ENOTSUP, errno.EOPNOTSUPP}
             if exc.errno not in _no_link:
                 # unrelated failure: don't leak the tmp manifest
-                # (_versions ignores dotfiles and vacuum scans only
-                # data dirs, so nothing else would ever clean it)
+                # (_versions ignores dotfiles, so nothing else would
+                # ever clean it)
                 try:
                     os.remove(tmp)
                 except OSError:
@@ -316,33 +315,3 @@ def list_group_snapshots(root: str) -> list[dict]:
         }
         for v in _versions(root)
     ]
-
-
-def vacuum_group_snapshots(root: str, *, keep_last: int = 1) -> dict:
-    """Drop all but the newest ``keep_last`` versions; delete every
-    data directory no retained manifest references (incl. orphans from
-    crashes before manifest publish)."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    vs = _versions(root)
-    keep, drop = vs[-keep_last:], vs[:-keep_last]
-    referenced: set[str] = set()
-    for v in keep:
-        for e in _load(root, v)["tables"].values():
-            for f in e["files"]:
-                referenced.add(
-                    os.path.dirname(os.path.abspath(os.path.join(root, f)))
-                )
-    removed = []
-    for entry in sorted(os.listdir(root)):
-        data_root = os.path.join(root, entry, "data")
-        if entry == _MANIFEST_DIR or not os.path.isdir(data_root):
-            continue
-        for d in sorted(os.listdir(data_root)):
-            full = os.path.abspath(os.path.join(data_root, d))
-            if full not in referenced:
-                shutil.rmtree(full)
-                removed.append(os.path.join(entry, "data", d))
-    for v in drop:
-        os.remove(os.path.join(_mdir(root), f"v{v}.json"))
-    return {"dropped_versions": drop, "removed_dirs": removed}

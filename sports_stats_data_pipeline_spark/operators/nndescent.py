@@ -1,7 +1,7 @@
 """Graph ANN: distributed k-NN-graph construction (NN-Descent) and
 beam graph search — the HNSW-class leg of the similarity family.
 
-IVF (operators/similarity.py) and the three LSH families cover
+IVF (operators/quantize.py) and the three LSH families cover
 bucketed candidate generation, but the production question at high
 dimension is RECALL: graph indexes (HNSW, NSG, DiskANN) dominate the
 recall/latency frontier, and their base structure is a k-NN GRAPH. The
@@ -59,8 +59,7 @@ HNSW's fixed entry-point analog).
 Determinism contract: md5 init, total-order ranking, integer ids —
 two builds over the same data are bit-identical (pinned in
 tests/test_nndescent.py), which makes the index diffable and the
-build replayable, the same property every other index in this repo
-holds (IVF, BM25, snapshots).
+build replayable.
 """
 
 from __future__ import annotations
@@ -467,7 +466,7 @@ def build_knn_graph_index(
     vec_col: str = "embedding",
 ) -> None:
     """Materialize the graph index at ``path`` — the persisted form of
-    the build, mirroring build_ivf_index / build_bm25_index:
+    the build:
 
     - ``graph/``   — ``(src, dst, sim, rank)``, hash-partitioned and
       sorted by ``src`` so a query batch's frontier join prunes row
@@ -476,8 +475,8 @@ def build_knn_graph_index(
 
     Build once (the expensive NN-Descent rounds), then every query
     batch is :func:`graph_search_indexed` — joins against the stored
-    relations, zero descent work at query time. Refresh cadence is the
-    IVF story: appends degrade graph recall gradually; rebuild on the
+    relations, zero descent work at query time. Refresh cadence:
+    appends degrade graph recall gradually; rebuild on the
     drift signal (operators/drift over the degree histogram is the
     natural monitor). Builds with ``incremental=True`` — bit-identical
     output (pinned), and the offline index build is exactly where the
@@ -514,8 +513,7 @@ def graph_search_indexed(
     """:func:`graph_search` served from a :func:`build_knn_graph_index`
     layout — identical output contract, no descent at query time.
     ``query_filter`` is a Column predicate over the vectors relation
-    ``(id_col, v)``, typically an id predicate (the ivf_topk_indexed
-    convention)."""
+    ``(id_col, v)``, typically an id predicate."""
     graph = spark.read.parquet(f"{path}/graph")
     stored = spark.read.parquet(f"{path}/vectors")
     # apply the filter on the documented (id_col, v) relation BEFORE

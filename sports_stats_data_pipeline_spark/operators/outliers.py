@@ -37,7 +37,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["mad_outliers", "winsorize"]
+__all__ = ["mad_outliers"]
 
 #: 0.6745 * dev > 3.5 * mad, cross-multiplied into integers
 _Z_NUM = 6745  # 0.6745 * 10^4
@@ -157,89 +157,5 @@ def mad_outliers(
             )
             .alias("is_outlier"),
         )
-    )
-    return out.drop("__g") if drop_g else out
-
-
-def winsorize(
-    df: DataFrame,
-    value: str,
-    *,
-    group_by: Sequence[str] = (),
-    lower_bp: int = 100,
-    upper_bp: int = 9_900,
-) -> DataFrame:
-    """Clamp ``value`` to per-group exact percentile bounds (default
-    [1%, 99%]) — the detection-free sibling of :func:`mad_outliers`
-    for when the policy is "cap the tails, keep the rows" (feature
-    clipping before training, revenue capping in marts).
-
-    Percentile positions use the same order statistics as the median
-    machinery: bound k at basis-point ``p`` is the value at sorted
-    position ``max(1, ceil(n * p / 10000))`` with the ceil computed in
-    INTEGER arithmetic (``(n*p + 9999) div 10000`` — a double ceil
-    drifts past 2^53) — a real data value, no interpolation, so
-    clamping is bit-identical across engines and partitionings. Adds ``lo``, ``hi``, and ``<value>_w`` (the clamped
-    copy); NULLs pass through unclamped. Same single-exchange shape as
-    mad_outliers: windows, bound aggregates, and the join back all
-    cluster on the group key.
-    """
-    if not (0 <= lower_bp < upper_bp <= 10_000):
-        raise ValueError("need 0 <= lower_bp < upper_bp <= 10000")
-    t = dict(df.dtypes)[value]
-    if t not in ("int", "bigint", "smallint", "tinyint"):
-        raise ValueError(
-            f"value column {value!r} must be integral, got {t}"
-        )
-    clash = {"lo", "hi", f"{value}_w"} & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"winsorize output columns collide with input: {sorted(clash)}"
-        )
-    keys = list(group_by)
-    if not keys:
-        df = df.withColumn("__g", F.lit(1))
-        keys = ["__g"]
-        drop_g = True
-    else:
-        drop_g = False
-    vals = df.filter(F.col(value).isNotNull()).repartition(*keys)
-    w = Window.partitionBy(*keys).orderBy(value)
-    ranked = vals.withColumn("__rn", F.row_number().over(w)).withColumn(
-        "__n", F.count(F.lit(1)).over(Window.partitionBy(*keys))
-    )
-    lo_pos = F.greatest(
-        F.lit(1).cast("long"),
-        F.expr(f"(__n * {lower_bp} + 9999) div 10000"),
-    )
-    hi_pos = F.greatest(
-        F.lit(1).cast("long"),
-        F.expr(f"(__n * {upper_bp} + 9999) div 10000"),
-    )
-    bounds = (
-        ranked.withColumn(
-            "__lo_v", F.when(F.col("__rn") == lo_pos, F.col(value))
-        )
-        .withColumn("__hi_v", F.when(F.col("__rn") == hi_pos, F.col(value)))
-        .groupBy(*keys)
-        .agg(
-            F.min("__lo_v").alias("lo"),
-            F.min("__hi_v").alias("hi"),
-        )
-    )
-    out = (
-        df.join(bounds, keys, "left")
-        .withColumn(
-            f"{value}_w",
-            F.when(
-                F.col(value).isNull(), F.lit(None).cast("long")
-            ).otherwise(
-                F.greatest(
-                    F.col("lo"), F.least(F.col("hi"), F.col(value))
-                ).cast("long")
-            ),
-        )
-        .withColumn("lo", F.col("lo").cast("long"))
-        .withColumn("hi", F.col("hi").cast("long"))
     )
     return out.drop("__g") if drop_g else out

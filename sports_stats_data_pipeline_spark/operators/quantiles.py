@@ -30,13 +30,12 @@ Why this shape instead of KLL/t-digest:
   O(n/sqrt(k)) w.h.p.
 
 Scale shape: per-batch partials are one hash aggregate clustered on the
-mart keys (map-side combinable after :func:`qsketch_build`'s shard
-stage); state per key is ≤ k entries (~16 bytes each, 16 KiB at
+mart keys; state per key is ≤ k entries (~16 bytes each, 16 KiB at
 k=1024); maintenance is O(Δ log k). The naive single-stage build
 (``collect_list`` then slice) holds a whole group per aggregation
-buffer — :func:`qsketch_build` therefore pre-shards each group by an
-entry hash and combines the shard sketches, bounding any single buffer
-by group/shards without changing the result (merge associativity).
+buffer; pre-sharding each group by an entry hash and combining the
+shard sketches with :func:`qsketch_combine` bounds any single buffer by
+group/shards without changing the result (merge associativity).
 
 Quantile convention: the LOWER-interpolation rank statistic — for
 quantile num/den over n sampled values, the value at sorted index
@@ -48,14 +47,13 @@ boundary ranks).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
     "qsketch_entry",
     "qsketch_agg",
     "qsketch_combine",
-    "qsketch_build",
     "qsketch_quantile",
     "QSKETCH_K",
 ]
@@ -86,8 +84,8 @@ def qsketch_agg(entry: Column | str, k: int = QSKETCH_K) -> Column:
     (set semantics — with unique row ids the distinct is a no-op, and
     it makes the sketch replay-idempotent: a re-offered entry is kept
     once, the HLL precedent). The aggregation buffer holds the group's
-    rows before the slice — fine for delta batches; use
-    :func:`qsketch_build` for unbounded groups."""
+    rows before the slice — fine for delta batches; pre-shard unbounded
+    groups (module docstring)."""
     return F.slice(
         F.array_sort(F.array_distinct(F.collect_list(_c(entry)))), 1, k
     )
@@ -105,31 +103,6 @@ def qsketch_combine(sketch: Column | str, k: int = QSKETCH_K) -> Column:
         ),
         1,
         k,
-    )
-
-
-def qsketch_build(
-    df: DataFrame,
-    keys: list[str],
-    entry: Column,
-    *,
-    k: int = QSKETCH_K,
-    shards: int = 16,
-) -> DataFrame:
-    """(keys..., qsk) with bounded aggregation buffers: shard each group
-    by an entry hash, bottom-k per shard, then combine — identical to
-    the single-stage sketch (merge is split-invariant), but no buffer
-    ever holds more than ~group/shards entries."""
-    # pmod(xxhash64), not abs(hash)%: abs(Integer.MIN_VALUE) throws
-    # under ANSI mode — the repo's standard shard idiom (bloom/skewjoin)
-    shard = F.pmod(F.xxhash64(entry), F.lit(shards)).alias("__shard")
-    partial = (
-        df.select(*keys, entry.alias("__e"), shard)
-        .groupBy(*keys, "__shard")
-        .agg(qsketch_agg("__e", k).alias("qsk"))
-    )
-    return partial.groupBy(*keys).agg(
-        qsketch_combine("qsk", k).alias("qsk")
     )
 
 

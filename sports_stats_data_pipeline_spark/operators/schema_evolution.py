@@ -92,36 +92,3 @@ def evolve_to_schema(
     if allow_extra:
         cols += [F.col(n) for n in sorted(extra)]
     return batch.select(*cols)
-
-
-def merge_schemas(
-    a: T.StructType, b: T.StructType, allow_lossy: bool = False
-) -> T.StructType:
-    """Union of two schemas with safe widening on conflicts (the target
-    a sink evolves TO when both old files and new batches must fit):
-    columns of ``a`` first (widened where ``b`` disagrees), then new
-    columns of ``b``. Incompatible conflicts raise; precision-losing
-    resolutions (long vs double) require ``allow_lossy=True``."""
-    out = []
-    allowed = _SAFE_WIDENINGS | (_LOSSY_WIDENINGS if allow_lossy else set())
-    b_by_name = {f.name: f for f in b.fields}
-    for f in a.fields:
-        if f.name not in b_by_name:
-            out.append(f)
-            continue
-        other = b_by_name[f.name]
-        if f.dataType == other.dataType:
-            out.append(f)
-        elif (f.dataType, other.dataType) in allowed:
-            out.append(T.StructField(f.name, other.dataType, True))
-        elif (other.dataType, f.dataType) in allowed:
-            out.append(f)
-        else:
-            raise ValueError(
-                f"cannot merge column {f.name}: "
-                f"{f.dataType.simpleString()} vs "
-                f"{other.dataType.simpleString()}"
-            )
-    seen = {f.name for f in a.fields}
-    out += [f for f in b.fields if f.name not in seen]
-    return T.StructType(out)

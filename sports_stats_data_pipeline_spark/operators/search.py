@@ -28,7 +28,7 @@ tests/test_search.py matches exactly).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
@@ -36,8 +36,6 @@ from ..functions.text import tokens
 __all__ = [
     "term_stats",
     "bm25_topk",
-    "build_bm25_index",
-    "bm25_topk_indexed",
 ]
 
 
@@ -149,109 +147,3 @@ def bm25_topk(
         F.col("score_micro").desc(), F.col(id_col).asc()
     ).limit(k)
 
-
-def build_bm25_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    postings_partitions: int = 32,
-) -> None:
-    """Materialize the full inverted index for a corpus at ``path``:
-
-    - ``postings/``  — ``(term, doc_id, tf)``, range-partitioned and
-      sorted by term so a query's ``term IN (...)`` predicate prunes
-      parquet row groups (min/max stats) and only matching postings are
-      read;
-    - ``doc_lens/``  — ``(id_col, dl)`` per-document token counts;
-    - ``meta/``      — one row ``(n_docs, sum_dl)``; avgdl derives as
-      ``sum_dl / n_docs`` so two indexes could be merged exactly
-      (counts add — an average wouldn't).
-
-    This is the executable form of the "persist the stats next to the
-    corpus" prescription: building costs one corpus scan, after which
-    every query batch touches only index bytes — the corpus itself is
-    never re-read or re-aggregated (asserted on the plan in
-    tests/test_search.py). df (document frequency) is NOT stored — it
-    is exactly ``count(*)`` of a term's postings, which the query-time
-    aggregate recovers from the pruned read for free.
-    """
-    postings = (
-        docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-        .groupBy("term", id_col)
-        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        .repartitionByRange(postings_partitions, "term")
-        .sortWithinPartitions("term")
-    )
-    postings.write.mode("overwrite").parquet(f"{path}/postings")
-    docs.select(
-        F.col(id_col), F.size(tokens(text_col)).cast("long").alias("dl")
-    ).write.mode("overwrite").parquet(f"{path}/doc_lens")
-    docs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(tokens(text_col))).cast("long").alias("sum_dl"),
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def bm25_topk_indexed(
-    spark: SparkSession,
-    path: str,
-    query_terms: list[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """:func:`bm25_topk` served from a :func:`build_bm25_index` layout —
-    identical output contract, zero corpus access.
-
-    The postings read carries ``term IN (query_terms)`` which parquet
-    pushes into row-group pruning (the postings are term-sorted), so
-    I/O is proportional to the query's posting lists, not the corpus.
-    df per term is recomputed from the pruned postings (count of docs
-    per term), idf/norm arithmetic is bit-identical to the direct path.
-    """
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
-    qt = sorted(set(query_terms))
-    meta = spark.read.parquet(f"{path}/meta").first()
-    n_docs, sum_dl = meta["n_docs"], meta["sum_dl"]
-    if not n_docs:
-        empty = spark.read.parquet(f"{path}/doc_lens").select(
-            F.col(id_col),
-            F.lit(0).cast("long").alias("score_micro"),
-            F.lit(0).cast("int").alias("n_query_terms_hit"),
-        )
-        return spark.createDataFrame([], empty.schema)
-    avgdl = sum_dl / n_docs
-    hits = spark.read.parquet(f"{path}/postings").filter(
-        F.col("term").isin(qt)
-    )
-    qdf = hits.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-    )
-    qidf = qdf.select("term", idf.alias("idf"))
-    doc_lens = spark.read.parquet(f"{path}/doc_lens")
-    tf = hits.join(doc_lens, id_col)
-    norm = F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(float(avgdl))
-    )
-    contrib = F.col("idf") * (
-        F.col("tf") * (F.lit(k1) + 1.0) / (F.col("tf") + norm)
-    )
-    scored = (
-        tf.join(F.broadcast(qidf), "term")
-        .groupBy(id_col)
-        .agg(
-            F.sum(F.floor(F.lit(1e6) * contrib).cast("long")).alias(
-                "score_micro"
-            ),
-            F.count(F.lit(1)).cast("int").alias("n_query_terms_hit"),
-        )
-    )
-    return scored.orderBy(
-        F.col("score_micro").desc(), F.col(id_col).asc()
-    ).limit(k)

@@ -657,35 +657,36 @@ def dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _MINHASH_BUCKET_CAP = 64
 #: signature width / rows-per-band of the neardup family's LSH banding
-#: (4 bands x 2 rows over 8 hashes) — referenced by name everywhere the
-#: banding is (re)built, incl. _minhash_band_relation, so the scale
-#: harness can never band with stale parameters.
+#: (4 bands x 2 rows over 8 hashes).
 _MINHASH_HASHES = 8
 _MINHASH_BAND_ROWS = 2
 
 
-def _minhash_band_relation(docs: DataFrame) -> DataFrame:
-    """(doc_id, band_key) — exactly the banding relation
-    neardup_minhash_pairs buckets on, rebuilt standalone (no persist,
-    no cap) for observers: the skew harness' caps-bind guard
+def _minhash_shingle_hashes(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles, sh_h): each doc's shingle set and one base md5
+    hash per shingle — the input of :func:`_minhash_bands`."""
+    return docs.select("doc_id", shingles("text").alias("shingles")).select(
+        "doc_id",
+        "shingles",
+        shingle_hashes(F.col("shingles")).alias("sh_h"),
+    )
+
+
+def _minhash_bands(hashed: DataFrame) -> DataFrame:
+    """(doc_id, band_key) over :func:`_minhash_shingle_hashes` output —
+    the banding relation neardup_minhash_pairs buckets on (before the
+    cap). The skew harness' caps-bind guard
     (tests/test_scale_replica.py) counts over-cap buckets on it, and a
-    100 TB deployment would log the same relation's bucket-size
-    distribution as the skipped-bucket data-quality metric."""
-    return (
-        docs.select("doc_id", shingles("text").alias("shingles"))
-        .select("doc_id", shingle_hashes(F.col("shingles")).alias("sh_h"))
-        .select(
-            "doc_id",
-            *minhash_signature_from_hashes(
-                F.col("sh_h"), _MINHASH_HASHES
-            ),
-        )
-        .select(
-            "doc_id",
-            F.explode(
-                F.array(*band_keys(_MINHASH_HASHES, _MINHASH_BAND_ROWS))
-            ).alias("band_key"),
-        )
+    100 TB deployment would log its bucket-size distribution as the
+    skipped-bucket data-quality metric."""
+    return hashed.select(
+        "doc_id",
+        *minhash_signature_from_hashes(F.col("sh_h"), _MINHASH_HASHES),
+    ).select(
+        "doc_id",
+        F.explode(
+            F.array(*band_keys(_MINHASH_HASHES, _MINHASH_BAND_ROWS))
+        ).alias("band_key"),
     )
 
 _NEARDUP_DOCS_SQL = """
@@ -853,25 +854,9 @@ def _minhash_verified_pairs(docs: DataFrame) -> DataFrame:
     # to recompute per consumer. At cluster scale this stage would be
     # written to a parquet/Delta signature table; in-session, persist()
     # is the same cut.
-    sig = (
-        docs.select("doc_id", shingles("text").alias("shingles"))
-        .select(
-            "doc_id",
-            "shingles",
-            shingle_hashes(F.col("shingles")).alias("sh_h"),
-        )
-        .persist()
-    )
+    sig = _minhash_shingle_hashes(docs).persist()
     sh = sig.select("doc_id", "shingles")
-    banded = sig.select(
-        "doc_id",
-        *minhash_signature_from_hashes(F.col("sh_h"), _MINHASH_HASHES),
-    ).select(
-        "doc_id",
-        F.explode(
-            F.array(*band_keys(_MINHASH_HASHES, _MINHASH_BAND_ROWS))
-        ).alias("band_key"),
-    )
+    banded = _minhash_bands(sig)
     # skew guard (see module comment): super-buckets never reach the join.
     # persist: the capped relation feeds BOTH sides of the self-join —
     # without the boundary the hot-key aggregate + anti-join run twice.

@@ -1,3 +1,3 @@
-from .tables import TABLE_NAMES, load_table, load_tables, register_views
+from .tables import TABLE_NAMES, load_table
 
-__all__ = ["TABLE_NAMES", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLE_NAMES", "load_table"]

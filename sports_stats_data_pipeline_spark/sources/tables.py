@@ -246,15 +246,3 @@ def load_table(
             # epoch-preserving and matches DuckDB's naive-timestamp math.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table and register it as a temp view for spark.sql use."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables

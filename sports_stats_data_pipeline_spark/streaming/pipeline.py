@@ -245,26 +245,6 @@ def streaming_user_sessions_exact(
     return spark.table(sink).filter(F.col("user_id") != -1)
 
 
-def streaming_dedup(events_stream: DataFrame, keys: list[str]) -> DataFrame:
-    """State-store keyed dedup — the exact streaming analog of the
-    reference's processed-key set (SURVEY.md §2.10 row 2): first
-    occurrence of a key passes, replays and duplicates within the
-    watermark horizon are dropped by state.
-
-    Uses ``dropDuplicatesWithinWatermark`` (Spark >= 3.5), NOT plain
-    ``dropDuplicates``: with a pure-key subset (no event-time column),
-    ``dropDuplicates`` never evicts state — the watermark instead drops
-    late NEW keys while state grows without bound. The WithinWatermark
-    variant evicts a key once the watermark passes its expiry, which is
-    what makes state finite at 100 TB (the reference's in-memory ``set``
-    grows without bound). The trade is explicit: a replay arriving later
-    than the watermark delay re-admits the key — size the delay to the
-    at-least-once redelivery window of the source."""
-    return events_stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
-        keys
-    )
-
-
 def run_streaming_upsert(
     spark: SparkSession,
     sf_dir: str,

@@ -1,6 +1,5 @@
 """Bloom-filter primitive: no false negatives (hard guarantee), bounded
-false-positive rate, incremental merge exactness, parquet round-trip,
-and two-phase insert-if-absent equivalence with the plain operator.
+false-positive rate, parquet round-trip, and two-phase insert-if-absent equivalence with the plain operator.
 
 Engine-specific hashing (xxhash64) means there is no DuckDB twin; these
 property tests are the correctness pin (operators/bloom.py docstring).
@@ -14,10 +13,8 @@ from pyspark.sql import functions as F
 from sports_stats_data_pipeline_spark.operators.bloom import (
     build_bloom,
     insert_if_absent_bloom,
-    merge_blooms,
     optimal_params,
     probe_bloom,
-    shards_for,
 )
 from sports_stats_data_pipeline_spark.operators.merge import insert_if_absent
 
@@ -50,21 +47,6 @@ def test_false_positive_rate_bounded(spark):
     outsiders = _keys_df(spark, 1_000_000, 1_002_000)
     fp = probe_bloom(outsiders, "k", bloom).filter("maybe_present").count()
     assert fp / 2_000 < 0.05  # sized for 1%; generous margin for variance
-
-
-def test_merge_equals_build_on_union(spark):
-    m, k = optimal_params(1_000, 0.01)
-    a, b = _keys_df(spark, 0, 500), _keys_df(spark, 400, 1_000)
-    merged = merge_blooms(build_bloom(a, "k", m, k), build_bloom(b, "k", m, k))
-    whole = build_bloom(a.unionByName(b), "k", m, k)
-    assert merged.collect() == whole.collect()
-
-
-def test_merge_rejects_mismatched_params(spark):
-    a = build_bloom(_keys_df(spark, 0, 10), "k", 640, 3)
-    b = build_bloom(_keys_df(spark, 0, 10), "k", 1280, 3)
-    with pytest.raises(ValueError, match="different"):
-        merge_blooms(a, b)
 
 
 def test_parquet_round_trip(spark, tmp_path):
@@ -118,18 +100,6 @@ def test_definite_new_skips_join_path(spark):
 # ---- sharded representation (100-TB key cardinality path) ----------------
 
 
-def test_shards_for_bounds_row_size():
-    # 10^10 keys @ ~9.6 bits/key ≈ 96 Gbit: a single row would be ~12 GB,
-    # far past Spark's 2 GB array-row ceiling. shards_for picks a power of
-    # two keeping every shard under the byte budget.
-    m, _ = optimal_params(10_000_000_000, 0.01)
-    shards = shards_for(m)
-    assert shards > 1 and (shards & (shards - 1)) == 0
-    assert m // shards <= (8 << 20) * 8  # ≤ 8 MB per shard row
-    # tiny filters stay single-row
-    assert shards_for(640) == 1
-
-
 def test_sharded_no_false_negatives_and_fp(spark):
     members = _keys_df(spark, 0, 2_000)
     m, k = optimal_params(2_000, 0.01)
@@ -141,25 +111,6 @@ def test_sharded_no_false_negatives_and_fp(spark):
     outsiders = _keys_df(spark, 1_000_000, 1_002_000)
     fp = probe_bloom(outsiders, "k", bloom).filter("maybe_present").count()
     assert fp / 2_000 < 0.05
-
-
-def test_sharded_merge_equals_build_on_union(spark):
-    m, k = optimal_params(1_000, 0.01)
-    m = ((m + 64 * 4 - 1) // (64 * 4)) * (64 * 4)
-    a, b = _keys_df(spark, 0, 500), _keys_df(spark, 400, 1_000)
-    merged = merge_blooms(
-        build_bloom(a, "k", m, k, shards=4), build_bloom(b, "k", m, k, shards=4)
-    )
-    whole = build_bloom(a.unionByName(b), "k", m, k, shards=4)
-    key = lambda r: r["__bloom_shard"]
-    assert sorted(merged.collect(), key=key) == sorted(whole.collect(), key=key)
-
-
-def test_sharded_merge_mismatched_shards_rejected(spark):
-    a = build_bloom(_keys_df(spark, 0, 10), "k", 1024, 3, shards=2)
-    b = build_bloom(_keys_df(spark, 0, 10), "k", 1024, 3, shards=4)
-    with pytest.raises(ValueError, match="different"):
-        merge_blooms(a, b)
 
 
 def test_sharded_insert_if_absent_matches_plain(spark):

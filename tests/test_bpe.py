@@ -80,84 +80,27 @@ def test_early_stop_when_nothing_repeats(spark):
     assert merges == []  # every pair occurs once -> no useful merge
 
 
-def test_pandas_encoder_matches_expression_fold(spark):
-    """encode_words_pandas (the production-size-vocab path: rank-greedy
-    per word, merge table broadcast, Arrow batches) must produce the
-    IDENTICAL tokenization as the expression-fold encoder replaying
-    merges sequentially — on corpus-trained merges over the corpus's
-    own word vocabulary."""
-    from sports_stats_data_pipeline_spark.operators.bpe import (
-        build_word_vocab,
-        encode_words,
-        encode_words_pandas,
-        train_bpe,
-    )
-    from sports_stats_data_pipeline_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(
-        120
-    )
-    merges = train_bpe(docs, 12)
-    assert len(merges) >= 8
-    words = build_word_vocab(docs).select("word").distinct()
-    a = {
-        r["word"]: list(r["bpe_tokens"])
-        for r in encode_words(words, merges).collect()
-    }
-    b = {
-        r["word"]: list(r["bpe_tokens"])
-        for r in encode_words_pandas(words, merges).collect()
-    }
-    assert a == b and len(a) > 20
-    # adversarial overlap shapes
-    tricky = spark.createDataFrame(
-        [("aaaa",), ("abab",), ("",), ("a",)], "word string"
-    )
-    ta = {
-        r["word"]: list(r["bpe_tokens"])
-        for r in encode_words(tricky, merges).collect()
-    }
-    tb = {
-        r["word"]: list(r["bpe_tokens"])
-        for r in encode_words_pandas(tricky, merges).collect()
-    }
-    assert ta == tb
-
-
-def test_pandas_encoder_null_word_yields_null(spark):
-    """A NULL word must tokenize to NULL in BOTH paths (split(NULL) is
-    NULL in the expression fold; the Arrow path must not crash on None)."""
-    from sports_stats_data_pipeline_spark.operators.bpe import (
-        encode_words,
-        encode_words_pandas,
-    )
+def test_encoder_null_word_yields_null(spark):
+    """A NULL word tokenizes to NULL (split(NULL) is NULL in the
+    expression fold)."""
+    from sports_stats_data_pipeline_spark.operators.bpe import encode_words
 
     words = spark.createDataFrame(
         [("ab",), (None,), ("ba",)], "word string"
     )
     merges = [("a", "b")]
     expr = {r["word"]: r["bpe_tokens"] for r in encode_words(words, merges).collect()}
-    arrow = {
-        r["word"]: r["bpe_tokens"]
-        for r in encode_words_pandas(words, merges).collect()
-    }
-    assert expr[None] is None and arrow[None] is None
-    assert list(arrow["ab"]) == ["ab"] and list(arrow["ba"]) == ["b", "a"]
-    assert {k: (v if v is None else list(v)) for k, v in expr.items()} == {
-        k: (v if v is None else list(v)) for k, v in arrow.items()
-    }
+    assert expr[None] is None
+    assert list(expr["ab"]) == ["ab"] and list(expr["ba"]) == ["b", "a"]
 
 
-def test_pandas_encoder_rank_floor_no_restart(spark):
-    """The Arrow encoder must replay merges in strictly increasing rank
-    order (one pass each), NOT restart-greedy. Adversarial merge table:
-    rank 0 ('ab','cd') is recreated by ranks 1-2 on the word 'abcd' —
-    a restart-greedy loop would then apply it ([abcd]); sequential
-    replay (= encode_words by construction) must not ([ab, cd])."""
-    from sports_stats_data_pipeline_spark.operators.bpe import (
-        encode_words,
-        encode_words_pandas,
-    )
+def test_encoder_rank_floor_no_restart(spark):
+    """The encoder replays merges in strictly increasing rank order (one
+    pass each), NOT restart-greedy. Adversarial merge table: rank 0
+    ('ab','cd') is recreated by ranks 1-2 on the word 'abcd' — a
+    restart-greedy loop would then apply it ([abcd]); sequential replay
+    must not ([ab, cd])."""
+    from sports_stats_data_pipeline_spark.operators.bpe import encode_words
 
     merges = [("ab", "cd"), ("a", "b"), ("c", "d")]
     words = spark.createDataFrame([("abcd",), ("ababcd",)], "word string")
@@ -165,9 +108,4 @@ def test_pandas_encoder_rank_floor_no_restart(spark):
         r["word"]: list(r["bpe_tokens"])
         for r in encode_words(words, merges).collect()
     }
-    arrow = {
-        r["word"]: list(r["bpe_tokens"])
-        for r in encode_words_pandas(words, merges).collect()
-    }
     assert expr["abcd"] == ["ab", "cd"]
-    assert expr == arrow

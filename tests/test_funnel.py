@@ -8,10 +8,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from sports_stats_data_pipeline_spark.operators.funnel import (
-    funnel_conversion,
-    funnel_steps,
-)
+from sports_stats_data_pipeline_spark.operators.funnel import funnel_steps
 from sports_stats_data_pipeline_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -68,10 +65,11 @@ def test_conversion_counts(spark):
             rows.append((eid, t0 + dt.timedelta(minutes=1), u, "click")); eid += 1
         if u < 2:
             rows.append((eid, t0 + dt.timedelta(minutes=2), u, "purchase")); eid += 1
-    got = {
-        r["step"]: r["n_users"]
-        for r in funnel_conversion(_mk(spark, rows), STEPS).collect()
-    }
+    # users reaching each step: those whose max_step is at least it
+    max_steps = [
+        r["max_step"] for r in funnel_steps(_mk(spark, rows), STEPS).collect()
+    ]
+    got = {k: sum(m >= k for m in max_steps) for k in (1, 2, 3)}
     assert got == {1: 10, 2: 6, 3: 2}
 
 

@@ -81,10 +81,6 @@ def test_approx_distinct_incremental_equals_exact(spark):
     """Batch-maintained HLL estimates equal exact COUNT(DISTINCT) at the
     test cardinalities (datasketches HLL is exact well past them), and
     the sketch union across batches equals the single-shot build."""
-    from sports_stats_data_pipeline_spark.operators.incremental import (
-        estimate_sketches,
-    )
-
     orders = _orders(spark)
     m = {
         "n_orders": ("count", "o_orderkey"),
@@ -96,7 +92,9 @@ def test_approx_distinct_incremental_equals_exact(spark):
         state = merge_aggregate_state(state, delta, KEYS, m)
     got = {
         r["o_orderpriority"]: (r["n_orders"], r["n_distinct_prices"])
-        for r in estimate_sketches(state, m).collect()
+        for r in state.withColumn(
+            "n_distinct_prices", F.hll_sketch_estimate("n_distinct_prices")
+        ).collect()
     }
     exact = {
         r["o_orderpriority"]: (r["n"], r["d"])
@@ -113,16 +111,12 @@ def test_approx_distinct_incremental_equals_exact(spark):
 def test_approx_distinct_is_replay_idempotent(spark):
     """Replaying a delta double-counts sums (pinned above) but must NOT
     move an HLL distinct estimate — sketch union has set semantics."""
-    from sports_stats_data_pipeline_spark.operators.incremental import (
-        estimate_sketches,
-    )
-
     df = spark.createDataFrame(
         [("a", i) for i in range(50)], "k string, v long"
     )
     m = {"d": ("approx_distinct", "v")}
     once = merge_aggregate_state(None, df, ["k"], m)
     replayed = merge_aggregate_state(once, df, ["k"], m)  # same delta again
-    a = estimate_sketches(once, m).collect()[0]["d"]
-    b = estimate_sketches(replayed, m).collect()[0]["d"]
+    a = once.select(F.hll_sketch_estimate("d").alias("d")).first()["d"]
+    b = replayed.select(F.hll_sketch_estimate("d").alias("d")).first()["d"]
     assert a == b == 50

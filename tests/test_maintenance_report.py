@@ -1,24 +1,37 @@
-"""small_file_report: fragmentation stats + recommendation thresholds."""
+"""small_file_report_df: fragmentation stats + recommendation
+thresholds over a (file, bytes) inventory."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import os
 
 from sports_stats_data_pipeline_spark.operators.maintenance import (
-    small_file_report,
+    small_file_report_df,
 )
 from sports_stats_data_pipeline_spark.sources.tables import load_table
 
 from .conftest import SF_SMOKE
 
 
+def _report(spark, path, **kw):
+    """The advisor's one row over the parquet files under ``path``."""
+    inv = [
+        (os.path.join(root, f), os.path.getsize(os.path.join(root, f)))
+        for root, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    ]
+    files = spark.createDataFrame(inv, "file string, bytes long")
+    return small_file_report_df(files, **kw).collect()[0]
+
+
 def test_fragmented_table_flagged(spark, tmp_path):
     out = str(tmp_path / "frag")
     load_table(spark, SF_SMOKE, "orders").repartition(16).write.parquet(out)
-    rep = small_file_report(out)  # 16 tiny files vs 128 MiB target
+    rep = _report(spark, out)  # 16 tiny files vs 128 MiB target
     assert rep["n_files"] == 16
     assert rep["n_small"] == 16 and rep["small_fraction_bp"] == 10_000
-    assert rep["recommend_compaction"] is True
+    assert rep["recommend_compaction"] == 1
     assert rep["p50_bytes"] <= rep["max_bytes"]
 
 
@@ -26,57 +39,14 @@ def test_healthy_single_file_not_flagged(spark, tmp_path):
     out = str(tmp_path / "one")
     load_table(spark, SF_SMOKE, "orders").coalesce(1).write.parquet(out)
     # one file: never worth a rewrite regardless of size
-    rep = small_file_report(out, target_bytes=1024)
+    rep = _report(spark, out, target_bytes=1024)
     assert rep["n_files"] == 1
-    assert rep["recommend_compaction"] is False
-
-
-def test_empty_dir(tmp_path):
-    rep = small_file_report(str(tmp_path))
-    assert rep["n_files"] == 0 and rep["recommend_compaction"] is False
-
-
-def test_relation_variant_matches_dict_variant(spark, tmp_path):
-    """small_file_report_df over the walked (file, bytes) inventory must
-    equal small_file_report's dict on the same directory — one decision
-    logic, two providers (round 6: the relation form is what the driver
-    slot gates)."""
-    import os
-
-    from sports_stats_data_pipeline_spark.operators.maintenance import (
-        small_file_report,
-        small_file_report_df,
-    )
-
-    df = spark.range(400).withColumn("pad", F.lit("x" * 64))
-    df.repartition(7).write.mode("overwrite").parquet(str(tmp_path / "t"))
-    want = small_file_report(str(tmp_path / "t"), target_bytes=1 << 20)
-    inv = [
-        (os.path.join(root, f), os.path.getsize(os.path.join(root, f)))
-        for root, _, files in os.walk(tmp_path / "t")
-        for f in files
-        if f.endswith(".parquet")
-    ]
-    got = small_file_report_df(
-        spark.createDataFrame(inv, "file string, bytes long"),
-        target_bytes=1 << 20,
-    ).collect()[0]
-    assert got["n_files"] == want["n_files"]
-    assert got["total_bytes"] == want["total_bytes"]
-    assert got["p50_bytes"] == want["p50_bytes"]
-    assert got["max_bytes"] == want["max_bytes"]
-    assert got["n_small"] == want["n_small"]
-    assert got["small_fraction_bp"] == want["small_fraction_bp"]
-    assert bool(got["recommend_compaction"]) == want["recommend_compaction"]
+    assert rep["recommend_compaction"] == 0
 
 
 def test_relation_variant_even_count_median_and_empty(spark):
     """Lower-median contract on an even-length inventory, and the empty
     inventory yielding an empty relation."""
-    from sports_stats_data_pipeline_spark.operators.maintenance import (
-        small_file_report_df,
-    )
-
     inv = spark.createDataFrame(
         [("a", 10), ("b", 20), ("c", 30), ("d", 1000)],
         "file string, bytes long",

@@ -1,84 +1,17 @@
-"""operators.multimodal pixel decode + nearest-neighbor resize: shape
-contracts, a hand-computed gather anchor, identity resize, determinism
-under repartitioning."""
+"""operators.multimodal real pixel decode: backend selection, the
+vendored PNG decoder's color types and bounds, and the pixel-schema
+shape contract."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from sports_stats_data_pipeline_spark.operators.multimodal import (
     attach_binary_payload,
-    fake_decode_pixels,
-    resize_nearest,
 )
 from sports_stats_data_pipeline_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
-
-
-def _pixels(spark):
-    docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    return fake_decode_pixels(attach_binary_payload(docs))
-
-
-def test_decode_shape_contract(spark):
-    px = _pixels(spark).persist()
-    assert px.count() == 500
-    bad = px.filter(
-        (F.size("pixels") != F.col("width") * F.col("height"))
-        | (F.col("width") < 2)
-        | (F.col("height") < 2)
-    )
-    assert bad.count() == 0
-    px.unpersist()
-
-
-def test_resize_shapes_and_identity(spark):
-    px = _pixels(spark)
-    out = resize_nearest(px, 8, 6).persist()
-    assert out.count() == 500
-    assert (
-        out.filter(
-            (F.col("width") != 8)
-            | (F.col("height") != 6)
-            | (F.size("pixels") != 48)
-        ).count()
-        == 0
-    )
-    out.unpersist()
-    # identity: resizing to the source dims returns the source pixels
-    one = px.filter(F.col("doc_id") == 0).first()
-    ident = (
-        resize_nearest(px.filter(F.col("doc_id") == 0), one["width"], one["height"])
-        .first()
-    )
-    assert list(ident["pixels"]) == list(one["pixels"])
-
-
-def test_hand_computed_gather_anchor(spark):
-    # 4x2 grid -> 2x1: rows ys = [0], cols xs = [0, 2]
-    df = spark.createDataFrame(
-        [(1, 4, 2, [10, 11, 12, 13, 20, 21, 22, 23])],
-        "doc_id long, width int, height int, pixels array<int>",
-    )
-    row = resize_nearest(df, 2, 1).first()
-    assert list(row["pixels"]) == [10, 12]
-    with pytest.raises(ValueError):
-        resize_nearest(df, 0, 1)
-
-
-def test_partition_invariance(spark):
-    px = _pixels(spark)
-    a = {
-        r["doc_id"]: list(r["pixels"])
-        for r in resize_nearest(px, 5, 5).collect()
-    }
-    b = {
-        r["doc_id"]: list(r["pixels"])
-        for r in resize_nearest(px.repartition(7), 5, 5).collect()
-    }
-    assert a == b
 
 
 def test_explicit_pillow_backend_raises_without_pillow(spark):
@@ -141,7 +74,8 @@ def test_real_decode_pixels_runs_without_pillow(spark, filter_type):
 
 def test_pure_decoder_color_types_and_chain(spark):
     """Color-type coverage (RGB/RGBA/palette/gray+alpha → 601-2 gray)
-    plus the decode → resize chain on the vendored backend."""
+    plus the Spark decode step of the pixel chain on the vendored
+    backend."""
     import struct
     import zlib
 
@@ -187,11 +121,8 @@ def test_pure_decoder_color_types_and_chain(spark):
     df = spark.createDataFrame(
         _png_fixture_rows(4)[:1], schema="doc_id long, payload binary"
     )
-    resized = resize_nearest(
-        mm.real_decode_pixels(df, backend="pure"), 2, 2
-    ).collect()[0]
-    assert (resized["width"], resized["height"]) == (2, 2)
-    assert len(resized["pixels"]) == 4
+    decoded = mm.real_decode_pixels(df, backend="pure").collect()[0]
+    assert len(decoded["pixels"]) == decoded["width"] * decoded["height"]
 
 
 def test_pure_backend_drops_null_payload(spark):

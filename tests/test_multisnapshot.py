@@ -1,6 +1,6 @@
 """operators.multisnapshot — one atomic commit across N tables:
 cross-table consistency, incremental append with carry-forward,
-crash-invisibility, vacuum retention."""
+crash-invisibility."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from sports_stats_data_pipeline_spark.operators.multisnapshot import (
     list_group_snapshots,
     read_group_table,
-    vacuum_group_snapshots,
     write_group_snapshot,
 )
 
@@ -73,7 +72,7 @@ def test_append_schema_mismatch_refused(spark, tmp_path):
     assert [m["version"] for m in list_group_snapshots(root)] == [1]
 
 
-def test_uncommitted_data_invisible_and_vacuumed(spark, tmp_path):
+def test_uncommitted_data_invisible(spark, tmp_path):
     root = str(tmp_path / "grp")
     write_group_snapshot(
         {"docs": _docs(spark, 6, "a"), "embs": _embs(spark, 6, 1)}, root
@@ -82,28 +81,12 @@ def test_uncommitted_data_invisible_and_vacuumed(spark, tmp_path):
     orphan = os.path.join(root, "docs", "data", "v9")
     _docs(spark, 3, "crash").write.parquet(orphan)
     assert read_group_table(spark, root, "docs").count() == 6  # invisible
-    rep = vacuum_group_snapshots(root, keep_last=1)
-    assert os.path.join("docs", "data", "v9") in rep["removed_dirs"]
-    assert not os.path.exists(orphan)
-    # live version untouched
-    assert read_group_table(spark, root, "docs").count() == 6
-
-
-def test_vacuum_keeps_referenced_versions(spark, tmp_path):
-    root = str(tmp_path / "grp")
-    for tag in ("a", "b", "c"):
-        write_group_snapshot({"docs": _docs(spark, 4, tag)}, root)
-    rep = vacuum_group_snapshots(root, keep_last=2)
-    assert rep["dropped_versions"] == [1]
-    assert read_group_table(spark, root, "docs", 2).count() == 4
-    with pytest.raises(FileNotFoundError):
-        read_group_table(spark, root, "docs", 1)
 
 
 def test_mid_commit_failure_cleans_all_written_dirs(spark, tmp_path):
     """ADVICE r6: a failure on the SECOND table of a commit must remove
-    the FIRST table's just-written v<k> dir too — no orphans waiting
-    for vacuum."""
+    the FIRST table's just-written v<k> dir too — no orphans left
+    behind."""
     root = str(tmp_path / "grp")
     write_group_snapshot(
         {"docs": _docs(spark, 4, "a"), "embs": _embs(spark, 4, 1)}, root
@@ -203,15 +186,11 @@ def test_commit_falls_back_to_rename_without_hardlinks(
 
 
 def test_random_op_sequences_match_dict_model(spark, tmp_path):
-    """Model-based check (round 7): random overwrite/append/vacuum
-    sequences against a plain-dict model of "what each retained version
-    contains". After EVERY op, every retained version of every table
-    must read back exactly the model's rows — which pins the two
-    subtle invariants no single-scenario test covers in combination:
-    carried-forward file lists survive vacuum (an append-mode manifest
-    references data dirs of versions vacuum may have DROPPED — those
-    dirs must be retained because a kept manifest references them),
-    and version visibility matches the manifest set exactly."""
+    """Model-based check (round 7): random overwrite/append sequences
+    against a plain-dict model of "what each version contains". After
+    EVERY op, every version of every table must read back exactly the
+    model's rows — which pins carried-forward file lists and version
+    visibility matching the manifest set exactly."""
     import random
 
     for seed in (0, 1, 2):
@@ -222,40 +201,31 @@ def test_random_op_sequences_match_dict_model(spark, tmp_path):
         counter = 0
         for step in range(8):
             op = (
-                rng.choice(["overwrite", "append", "append", "vacuum"])
+                rng.choice(["overwrite", "append", "append"])
                 if versions
                 else "overwrite"
             )
-            if op == "vacuum":
-                keep = rng.randint(1, len(versions))
-                vacuum_group_snapshots(root, keep_last=keep)
-                for v in versions[:-keep]:
-                    model.pop(v)
-                versions = versions[-keep:]
+            tabs = rng.sample(["a", "b", "c"], rng.randint(1, 3))
+            new_rows = {}
+            dfs = {}
+            for t in tabs:
+                rows = [
+                    (counter + i, f"{t}{step}")
+                    for i in range(rng.randint(1, 4))
+                ]
+                counter += 100
+                new_rows[t] = rows
+                dfs[t] = spark.createDataFrame(rows, "id long, val string")
+            v = write_group_snapshot(dfs, root, mode=op)
+            if op == "overwrite":
+                model[v] = {t: sorted(new_rows[t]) for t in tabs}
             else:
-                tabs = rng.sample(["a", "b", "c"], rng.randint(1, 3))
-                new_rows = {}
-                dfs = {}
+                prev = model[versions[-1]]
+                cur = {t: list(r) for t, r in prev.items()}
                 for t in tabs:
-                    rows = [
-                        (counter + i, f"{t}{step}")
-                        for i in range(rng.randint(1, 4))
-                    ]
-                    counter += 100
-                    new_rows[t] = rows
-                    dfs[t] = spark.createDataFrame(
-                        rows, "id long, val string"
-                    )
-                v = write_group_snapshot(dfs, root, mode=op)
-                if op == "overwrite":
-                    model[v] = {t: sorted(new_rows[t]) for t in tabs}
-                else:
-                    prev = model[versions[-1]]
-                    cur = {t: list(r) for t, r in prev.items()}
-                    for t in tabs:
-                        cur[t] = sorted(cur.get(t, []) + new_rows[t])
-                    model[v] = cur
-                versions.append(v)
+                    cur[t] = sorted(cur.get(t, []) + new_rows[t])
+                model[v] = cur
+            versions.append(v)
             for v in versions:
                 for t, rows in model[v].items():
                     got = sorted(

@@ -134,80 +134,3 @@ def test_duckdb_twin_on_orders(spark):
     )
     con.close()
     assert got == want
-
-
-def test_winsorize_hand_anchored(spark):
-    from sports_stats_data_pipeline_spark.operators.outliers import winsorize
-
-    # 10 values 1..10; [20%, 80%]: lo = pos ceil(10*0.2)=2 -> 2,
-    # hi = pos ceil(10*0.8)=8 -> 8
-    df = spark.createDataFrame([(v,) for v in range(1, 11)], "v long")
-    rows = {
-        r["v"]: r
-        for r in winsorize(df, "v", lower_bp=2000, upper_bp=8000).collect()
-    }
-    assert rows[1]["lo"] == 2 and rows[1]["hi"] == 8
-    assert rows[1]["v_w"] == 2 and rows[10]["v_w"] == 8
-    assert rows[5]["v_w"] == 5  # interior untouched
-
-
-def test_winsorize_nulls_and_bad_args(spark):
-    from sports_stats_data_pipeline_spark.operators.outliers import winsorize
-
-    df = spark.createDataFrame([(1,), (None,), (100,)], "v long")
-    rows = winsorize(df, "v").collect()
-    assert len(rows) == 3
-    assert [r["v_w"] for r in rows if r["v"] is None] == [None]
-    with pytest.raises(ValueError):
-        winsorize(df, "v", lower_bp=5000, upper_bp=5000)
-
-
-def test_winsorize_duckdb_twin_on_orders(spark):
-    import duckdb
-
-    from sports_stats_data_pipeline_spark.operators.outliers import winsorize
-
-    orders = load_table(spark, SF_SMOKE, "orders").select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("price_c"),
-    )
-    got = sorted(
-        (r["o_orderkey"], r["lo"], r["hi"], r["price_c_w"])
-        for r in winsorize(
-            orders, "price_c", group_by=["o_orderpriority"],
-            lower_bp=500, upper_bp=9500,
-        ).collect()
-    )
-    con = duckdb.connect()
-    want = sorted(
-        map(
-            tuple,
-            con.execute(f"""
-      WITH o AS (
-        SELECT o_orderkey, o_orderpriority,
-               CAST(ROUND(o_totalprice * 100) AS BIGINT) AS price_c
-        FROM read_parquet('{SF_SMOKE}/orders.parquet')
-      ),
-      ranked AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-                                     ORDER BY price_c) AS rn,
-               COUNT(*) OVER (PARTITION BY o_orderpriority) AS n
-        FROM o
-      ),
-      b AS (
-        SELECT o_orderpriority,
-               MIN(CASE WHEN rn = GREATEST(1, (n * 500 + 9999) // 10000)
-                        THEN price_c END) AS lo,
-               MIN(CASE WHEN rn = GREATEST(1, (n * 9500 + 9999) // 10000)
-                        THEN price_c END) AS hi
-        FROM ranked GROUP BY o_orderpriority
-      )
-      SELECT o.o_orderkey, b.lo, b.hi,
-             GREATEST(b.lo, LEAST(b.hi, o.price_c))
-      FROM o JOIN b USING (o_orderpriority)
-    """).fetchall(),
-        )
-    )
-    con.close()
-    assert got == want

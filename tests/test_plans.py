@@ -129,20 +129,6 @@ def test_lsh_skew_guard_is_broadcast_anti_join(spark):
     spark.catalog.clearCache()
 
 
-def test_ivf_probe_list_is_broadcast(spark):
-    from pyspark.sql import functions as F
-
-    from sports_stats_data_pipeline_spark.operators.similarity import ivf_topk
-    from sports_stats_data_pipeline_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF, "embeddings")
-    plan = _plan(ivf_topk(emb, F.col("vec_id") < 8, k=3, n_cells=4, n_probe=2))
-    # centroid table and probe list are broadcast; the corpus is never
-    # collected or cross-joined unpruned.
-    assert "Broadcast" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_corpus_quality_filter_broadcasts_model_and_index(spark):
     from sports_stats_data_pipeline_spark.plans.corpus import (
         corpus_quality_filter,

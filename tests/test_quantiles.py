@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from sports_stats_data_pipeline_spark.operators.quantiles import (
     qsketch_agg,
-    qsketch_build,
     qsketch_combine,
     qsketch_entry,
     qsketch_quantile,
@@ -110,22 +109,6 @@ def test_hot_value_does_not_monopolize_sample(spark):
     ).collect()[0]["qsk"]
     minority = sum(1 for e in sk if e["v"] != 100)
     assert 1 <= minority <= 20  # ~6.4 expected at a 10% share
-
-
-def test_sharded_build_equals_single_stage(spark):
-    """qsketch_build (bounded buffers) must equal the single-stage
-    aggregate bit-exactly — merge associativity in action."""
-    df = _rows_df(spark, 500)
-    entry = qsketch_entry("rid", "v")
-    single = {
-        r["k"]: r["qsk"]
-        for r in df.groupBy("k").agg(qsketch_agg(entry, 48).alias("qsk")).collect()
-    }
-    sharded = {
-        r["k"]: r["qsk"]
-        for r in qsketch_build(df, ["k"], entry, k=48, shards=8).collect()
-    }
-    assert sharded == single
 
 
 def test_duckdb_twin_of_build_and_quantile(spark):

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from sports_stats_data_pipeline_spark.operators.sampling import (
     deterministic_split,
@@ -161,225 +160,3 @@ def test_mix_rejects_negative_weight(spark):
     with pytest.raises(ValueError):
         mix_sources(docs, "doc_id", "source", {"x": -1.0})
 
-
-def test_grouped_split_keeps_groups_intact(spark):
-    from sports_stats_data_pipeline_spark.operators.sampling import (
-        grouped_split,
-    )
-    from sports_stats_data_pipeline_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "source"
-    )
-    out = grouped_split(
-        docs, "source", {"train": 0.8, "val": 0.1, "test": 0.1}, salt="g1"
-    )
-    straddlers = (
-        out.groupBy("source")
-        .agg(F.count_distinct("split").alias("k"))
-        .filter(F.col("k") > 1)
-    )
-    assert straddlers.count() == 0
-
-
-def test_split_leakage_report_and_cluster_keyed_fix(spark):
-    from sports_stats_data_pipeline_spark.operators.sampling import (
-        deterministic_split,
-        grouped_split,
-        split_leakage_report,
-    )
-
-    # near-dup pairs chain 1~2~3 and 10~11; per-row split separates some
-    # twins (leakage rows appear), cluster-keyed split cannot.
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
-    )
-    docs = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 10, 11, 20, 21)], "doc_id long"
-    )
-    fr = {"train": 0.5, "test": 0.5}
-    per_row = deterministic_split(docs, "doc_id", fr, salt="s")
-    report = split_leakage_report(pairs, per_row).collect()
-    assert sum(r["n_pairs"] for r in report) == 3  # every pair accounted
-
-    # cluster id = min doc id of the connected component
-    clusters = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20), (21, 21)],
-        "doc_id long, cluster_id long",
-    )
-    fixed = grouped_split(
-        docs.join(clusters, "doc_id"), "cluster_id", fr, salt="s"
-    )
-    fixed_report = split_leakage_report(pairs, fixed).collect()
-    assert all(r["leaking"] == 0 for r in fixed_report), fixed_report
-    assert sum(r["n_pairs"] for r in fixed_report) == 3
-
-
-# ---------------------------------------------------------------------------
-# stratified_sample: deterministic hash-ranked per-stratum draw
-# ---------------------------------------------------------------------------
-
-
-def test_stratified_sample_counts_and_determinism(spark):
-    from sports_stats_data_pipeline_spark.operators.sampling import (
-        stratified_sample,
-    )
-
-    docs = load_table(spark, SF, "documents")
-    strata = {
-        r["lang"]: r["n"]
-        for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    s = stratified_sample(docs, ["lang"], 7)
-    got = {
-        r["lang"]: r["n"]
-        for r in s.groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    assert got == {k: min(7, v) for k, v in strata.items()}
-    a = sorted(r["doc_id"] for r in s.collect())
-    b = sorted(
-        r["doc_id"] for r in stratified_sample(docs, ["lang"], 7).collect()
-    )
-    assert a == b
-
-
-def test_stratified_sample_is_bottom_k_of_the_hash(spark):
-    """The sample must be exactly the n smallest (hash, id) per stratum
-    — the property that makes the draw partitioning-independent."""
-    from sports_stats_data_pipeline_spark.operators.sampling import (
-        stratified_sample,
-    )
-
-    docs = load_table(spark, SF, "documents")
-    ranked = docs.select(
-        "doc_id", "lang", F.xxhash64(F.lit(3), F.col("doc_id")).alias("h")
-    ).collect()
-    by_lang = {}
-    for r in ranked:
-        by_lang.setdefault(r["lang"], []).append((r["h"], r["doc_id"]))
-    want = {
-        doc
-        for lang, rows in by_lang.items()
-        for _, doc in sorted(rows)[:5]
-    }
-    got = {
-        r["doc_id"]
-        for r in stratified_sample(docs, ["lang"], 5, seed=3).collect()
-    }
-    assert got == want
-
-
-def test_stratified_sample_seeds_differ(spark):
-    from sports_stats_data_pipeline_spark.operators.sampling import (
-        stratified_sample,
-    )
-
-    docs = load_table(spark, SF, "documents")
-    s0 = {r["doc_id"] for r in stratified_sample(docs, ["lang"], 5, seed=0).collect()}
-    s1 = {r["doc_id"] for r in stratified_sample(docs, ["lang"], 5, seed=1).collect()}
-    assert s0 != s1
-
-
-def test_stratified_sample_scalable_equals_plain(spark):
-    """The two-phase (prefix-split) quota draw must select the IDENTICAL
-    rows as the single-window stratified_sample, at several quota sizes
-    and prefix widths, on skewed strata."""
-    from sports_stats_data_pipeline_spark.operators.sampling import (
-        stratified_sample,
-        stratified_sample_scalable,
-    )
-
-    df = spark.range(4000).select(
-        F.col("id").alias("doc_id"),
-        # one mega-stratum (~3/4 of rows) plus a tail of small ones
-        F.when(F.col("id") % 4 != 0, F.lit("mega"))
-        .otherwise((F.col("id") % 13).cast("string"))
-        .alias("src"),
-    )
-    for n in (1, 7, 40):
-        for bits in (1, 4):
-            plain = {
-                r["doc_id"]
-                for r in stratified_sample(
-                    df, ["src"], n, seed=3
-                ).collect()
-            }
-            scalable = {
-                r["doc_id"]
-                for r in stratified_sample_scalable(
-                    df, ["src"], n, seed=3, prefix_bits=bits
-                ).collect()
-            }
-            assert scalable == plain, (n, bits)
-
-
-def test_weighted_sample_matches_python_reference(spark):
-    """A-Res keys computed independently in python over the same hash
-    values must select the identical sample; zero/NULL weights are
-    excluded; the draw is partitioning-invariant and seed-redrawable."""
-    import math
-
-    from sports_stats_data_pipeline_spark.operators.sampling import (
-        weighted_sample,
-    )
-
-    df = spark.range(500).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % 50 == 0, F.lit(None).cast("double"))
-        .when(F.col("id") % 7 == 0, F.lit(0.0))
-        .otherwise((F.col("id") % 9 + 1).cast("double"))
-        .alias("w"),
-    )
-    hashes = {
-        r["doc_id"]: r["h"]
-        for r in df.select(
-            "doc_id", F.xxhash64(F.lit(0), F.col("doc_id")).alias("h")
-        ).collect()
-    }
-    weights = {r["doc_id"]: r["w"] for r in df.collect()}
-    ref_keys = {}
-    for i, h in hashes.items():
-        w = weights[i]
-        if w is None or w <= 0:
-            continue
-        u = ((h % 2 ** 53) + 1) / float(2 ** 53)
-        ref_keys[i] = math.log(u) / w
-    want = {
-        i for i, _ in sorted(
-            ref_keys.items(), key=lambda kv: (-kv[1], kv[0])
-        )[:40]
-    }
-    for parts in (1, 8):
-        got = {
-            r["doc_id"]
-            for r in weighted_sample(
-                df.repartition(parts), 40, "w"
-            ).collect()
-        }
-        assert got == want
-    other = {
-        r["doc_id"]
-        for r in weighted_sample(df, 40, "w", seed=5).collect()
-    }
-    assert other != want  # a new seed redraws
-
-
-def test_weighted_sample_stratified_and_validation(spark):
-    from sports_stats_data_pipeline_spark.operators.sampling import (
-        weighted_sample,
-    )
-
-    df = spark.range(200).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 4).cast("string").alias("src"),
-        F.lit(1.0).alias("w"),
-    )
-    out = weighted_sample(df, 10, "w", strata_cols=["src"]).collect()
-    per = {}
-    for r in out:
-        per[r["src"]] = per.get(r["src"], 0) + 1
-    assert per == {"0": 10, "1": 10, "2": 10, "3": 10}
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="n must be"):
-        weighted_sample(df, 0, "w")

@@ -426,7 +426,8 @@ def test_skew_docs_caps_bind(spark):
 
     from sports_stats_data_pipeline_spark.plans.documents import (
         _MINHASH_BUCKET_CAP,
-        _minhash_band_relation,
+        _minhash_bands,
+        _minhash_shingle_hashes,
         _neardup_docs,
     )
 
@@ -434,7 +435,7 @@ def test_skew_docs_caps_bind(spark):
     n = docs.count()
     # the plan's OWN banding construction (shared helper) — this guard
     # can never observe a stale signature width / band shape
-    banded = _minhash_band_relation(docs)
+    banded = _minhash_bands(_minhash_shingle_hashes(docs))
     over = (
         banded.groupBy("band_key")
         .count()

@@ -1,20 +1,16 @@
 """SCD Type-2 dimension maintenance (operators/scd.py).
 
 Semantics pinned against a tiny hand-computed history plus a DuckDB
-window-SQL twin on generated data; the CDC apply path is pinned as
-exactly-a-full-rebuild for in-order batches; the physical plan is
-pinned to a single exchange (the 100 TB argument in the module doc)."""
+window-SQL twin on generated data; the physical plan is pinned to a single exchange (the 100 TB argument in the module doc)."""
 
 from __future__ import annotations
 
 import duckdb
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from sports_stats_data_pipeline_spark.operators.scd import (
     point_in_time_lookup,
-    scd2_apply_batch,
     scd2_build,
 )
 from sports_stats_data_pipeline_spark.plans.lint import exchange_count
@@ -119,49 +115,6 @@ def test_scd2_build_matches_duckdb_windows(spark):
     assert got == exp_norm
 
 
-def test_apply_batch_equals_rebuild(spark):
-    """In-order CDC batches: incremental apply == full rebuild over the
-    concatenated observation stream, including n_obs weights."""
-    past = [
-        (1, "A", 10), (1, "A", 20), (1, "B", 30),
-        (2, "X", 5), (2, "X", 6),
-        (3, "M", 1),
-    ]
-    batch = [
-        (1, "B", 40),   # extends current run -> n_obs 2
-        (1, "C", 50),   # new version
-        (2, "Y", 7),    # new version
-        # key 3 untouched
-    ]
-    hist = _hist(spark, past)
-    applied = scd2_apply_batch(
-        hist,
-        spark.createDataFrame(batch, CHANGES_SCHEMA),
-        ["k"], ["attr"], "seq",
-    )
-    rebuilt = _hist(spark, past + batch)
-    assert _collect(applied) == _collect(rebuilt)
-
-
-def test_apply_batch_touches_only_batch_keys(spark):
-    """The untouched partition of the dimension passes through without
-    being rebuilt — the O(Δ) contract."""
-    past = [(1, "A", 1), (2, "B", 1)]
-    hist = _hist(spark, past).persist()
-    applied = scd2_apply_batch(
-        hist,
-        spark.createDataFrame([(1, "Z", 9)], CHANGES_SCHEMA),
-        ["k"], ["attr"], "seq",
-    )
-    got = _collect(applied)
-    hist.unpersist()
-    assert got == [
-        (1, 1, "A", 1, 9, False, 1),
-        (1, 2, "Z", 9, None, True, 1),
-        (2, 1, "B", 1, None, True, 1),
-    ]
-
-
 def test_point_in_time_lookup(spark):
     """Each fact picks the version whose half-open interval contains
     its timestamp; a fact AT valid_from belongs to the new version;
@@ -215,30 +168,6 @@ def test_seq_collision_guard_documented(spark):
     )
     h = _collect(scd2_build(collapsed, ["k"], ["attr"], "seq"))
     assert [(v, a) for (_, v, a, *_rest) in h] == [(1, "B"), (2, "C")]
-
-
-@pytest.mark.parametrize("splits", [(3,), (1, 4), (2, 5, 8), (6, 7)])
-def test_apply_fold_invariance(spark, splits):
-    """Folding an in-order change stream through ANY sequence of
-    sequential batches yields the identical history (the CDC contract:
-    batch boundaries are an operational artifact, not a semantic one)."""
-    rows = [
-        (k, ["P", "Q", None][(k + s) % 3], s * 10 + k)
-        for k in range(1, 5)
-        for s in range(10)
-    ]
-    rows.sort(key=lambda r: r[2])
-    full = _hist(spark, rows)
-    cuts = [0, *[s * len(rows) // 10 for s in splits], len(rows)]
-    hist = None
-    for lo, hi in zip(cuts, cuts[1:]):
-        chunk = spark.createDataFrame(rows[lo:hi], CHANGES_SCHEMA)
-        if hist is None:
-            hist = scd2_build(chunk, ["k"], ["attr"], "seq")
-        else:
-            hist = scd2_apply_batch(hist, chunk, ["k"], ["attr"], "seq")
-        hist = hist.localCheckpoint(eager=True)  # cut the fold lineage
-    assert _collect(hist) == _collect(full)
 
 
 def test_point_in_time_null_attr_version(spark):

@@ -1,6 +1,6 @@
 """Schema evolution: add/widen/reorder conform, loud narrowing and
-extra-column rejection, schema merge with widening, and the round-trip
-through a parquet sink (old + evolved batches read back as one table)."""
+extra-column rejection, and the round-trip through a parquet sink (old
++ evolved batches read back as one table)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import types as T
 
 from sports_stats_data_pipeline_spark.operators.schema_evolution import (
     evolve_to_schema,
-    merge_schemas,
 )
 
 TARGET = T.StructType(
@@ -52,35 +51,19 @@ def test_allow_extra_appends_after_target(spark):
     assert [f.name for f in out.schema.fields] == ["id", "price", "note", "x"]
 
 
-def test_merge_schemas_widens_and_appends(spark):
-    a = T.StructType(
-        [T.StructField("id", T.IntegerType()), T.StructField("v", T.FloatType())]
-    )
-    b = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("w", T.StringType())]
-    )
-    m = merge_schemas(a, b)
-    assert [(f.name, f.dataType) for f in m.fields] == [
-        ("id", T.LongType()), ("v", T.FloatType()), ("w", T.StringType()),
-    ]
-    with pytest.raises(ValueError, match="cannot merge column id"):
-        merge_schemas(
-            a,
-            T.StructType([T.StructField("id", T.StringType())]),
-        )
-
-
 def test_parquet_sink_round_trip(spark, tmp_path):
     """The ingest story end-to-end: an old-schema file plus an evolved
-    new batch read back as one coherent table under the merged schema."""
+    new batch read back as one coherent table under the widened target
+    schema."""
     path = str(tmp_path / "t")
     old = spark.createDataFrame([(1, 10)], "id int, v int")
     old.write.mode("overwrite").parquet(path)
-    target = merge_schemas(
-        old.schema,
-        T.StructType(
-            [T.StructField("id", T.LongType()), T.StructField("note", T.StringType())]
-        ),
+    target = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("v", T.IntegerType()),
+            T.StructField("note", T.StringType()),
+        ]
     )
     new = spark.createDataFrame([(2, "hi")], "id int, note string")
     evolve_to_schema(new, target).write.mode("append").parquet(path)
@@ -102,14 +85,3 @@ def test_long_to_double_is_lossy_not_safe(spark):
         evolve_to_schema(batch, target)
     got = evolve_to_schema(batch, target, allow_lossy=True).collect()[0]
     assert isinstance(got["v"], float)
-    with pytest.raises(ValueError, match="cannot merge column v"):
-        merge_schemas(
-            T.StructType([T.StructField("v", T.LongType())]),
-            target,
-        )
-    m = merge_schemas(
-        T.StructType([T.StructField("v", T.LongType())]),
-        target,
-        allow_lossy=True,
-    )
-    assert m.fields[0].dataType == T.DoubleType()
